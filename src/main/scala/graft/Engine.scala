@@ -66,7 +66,8 @@ object Engine {
     // AQE settings) without a code change. Applied at BUILDER time (not
     // spark.conf.set) so core/static SparkConf entries (shuffle writer
     // thresholds, memory settings) are settable too, not only SQL
-    // runtime confs.
+    // runtime confs. A session that is already running keeps its static
+    // entries: see reapplyConf.
     val overrides = sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap {
       conf => conf.split(';').map(_.trim).filter(_.nonEmpty).map { kv =>
         kv.split("=", 2) match {
@@ -76,9 +77,16 @@ object Engine {
         }
       }
     }
+    val called = System.currentTimeMillis()
     val spark = overrides
       .foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
+    if (spark.sparkContext.startTime < called) { // an already running session
+      val ignored = reapplyConf(spark, overrides)
+      if (ignored.nonEmpty) System.err.println(
+        "[graft] SPARK_GRAFT_CONF: the Spark session was already running; " +
+        s"static entries not applied: ${ignored.mkString(", ")}")
+    }
     spark.sparkContext.setLogLevel("WARN")
     registerCapListener(spark)
     graft.plans.VecExpressions.register(spark)
@@ -94,14 +102,45 @@ object Engine {
     spark
   }
 
-  /** No-silent-caps surveillance (VERDICT r7 task 6): the dedup cap
-    * sites ([[graft.operators.Dedup.capDocFreq]] doc-frequency cap,
-    * `minhashLshCandidatesFromIndex` bucket cap) observe their
-    * dropped-entry counts in the pass they already run; this listener
-    * turns the observations into a stderr line WHEN A CAP BINDS, so a
-    * 100×-scale user sees the dedup went lossy instead of silently
-    * getting fewer pairs. Quiet when nothing is dropped.
+  /** Apply `overrides` to a session that is already running: runtime
+    * entries are set with `spark.conf.set`; returns the keys of static
+    * (SQL static or Spark core) entries that cannot change any more and
+    * do not already hold the requested value.
     */
+  private[graft] def reapplyConf(spark: SparkSession,
+                                 overrides: Seq[(String, String)]): Seq[String] =
+    overrides.flatMap { case (k, v) =>
+      if (spark.conf.getOption(k).contains(v)) None
+      else try { spark.conf.set(k, v); None }
+      catch { case _: org.apache.spark.sql.AnalysisException => Some(k) }
+    }
+
+  /** No-silent-caps surveillance: every lossy candidate cap is one
+    * [[graft.operators.Dedup.capDocFreq]] call, which observes its
+    * input and output entry counts as `graft_<label>_{in,out}_<tag>_<cap>`
+    * in the pass it already runs; this listener turns a pair with
+    * in > out into a stderr line, so a 100×-scale user sees the dedup
+    * went lossy instead of silently getting fewer pairs. Quiet when
+    * nothing is dropped. The cap sites:
+    *  - shingle doc-frequency `maxDocFreq` (label `cap`) in
+    *    `Dedup.shingleIndex` and `Dedup.hashedShingleIndex`, the index
+    *    of `ngramJaccardPairs`, `containmentPairs`, `substringDupPairs`,
+    *    `minhashLshPairs`, d3 and d19; `ngramJaccardPairsLenBounded`
+    *    caps its own (id, len, shingle) index the same way;
+    *  - `Dedup.winnowPairs` fingerprint doc-frequency (label `cap`);
+    *  - `Dedup.minhashLshCandidatesFromIndex` band buckets (label
+    *    `bucketcap`): d3 and `minhashLshPairs`;
+    *  - `Similarity.cosinePairsLsh` hyperplane buckets (label
+    *    `bucketcap`): d6;
+    *  - d19's band buckets (label `bucketcap`): the corpus side in the
+    *    job that writes the bucketed index, the probe batch in its own
+    *    materialization.
+    * Every cap runs inside a job that completes whatever the pairs
+    * downstream turn out to be (a materialization or a write), so its
+    * report arrives even when the pair set is empty.
+    */
+  private val CapIn = "graft_([a-z]+)_in_(\\d+_(\\d+))".r
+
   private def registerCapListener(spark: SparkSession): Unit =
     spark.listenerManager.register(
       new org.apache.spark.sql.util.QueryExecutionListener {
@@ -109,31 +148,17 @@ object Engine {
             qe: org.apache.spark.sql.execution.QueryExecution,
             durationNs: Long): Unit = {
           val m = qe.observedMetrics
-          // doc-frequency cap: paired in/out entry counts per tag
-          m.keys.filter(_.startsWith("graft_cap_in_")).foreach { k =>
-            val suffix = k.stripPrefix("graft_cap_in_")
-            m.get("graft_cap_out_" + suffix).foreach { outRow =>
-              val in = m(k).getLong(0)
-              val out = outRow.getLong(0)
-              if (in > out) System.err.println(
-                s"[graft] capDocFreq(cap=${suffix.split('_').last}): " +
-                s"dropped ${in - out} of $in index entries — the " +
-                "doc-frequency cap binds; dedup is candidate-lossy " +
-                "(raise maxDocFreq or accept)")
-            }
-          }
-          // LSH bucket cap: paired in/out banded-row counts per tag
-          m.keys.filter(_.startsWith("graft_bucketcap_in_")).foreach { k =>
-            val suffix = k.stripPrefix("graft_bucketcap_in_")
-            m.get("graft_bucketcap_out_" + suffix).foreach { outRow =>
-              val in = m(k).getLong(0)
-              val out = outRow.getLong(0)
-              if (in > out) System.err.println(
-                s"[graft] lsh bucket cap (max=${suffix.split('_').last}): " +
-                s"dropped ${in - out} of $in doc slots in degenerate " +
-                "buckets — candidates lossy there (raise maxBucket or " +
-                "accept)")
-            }
+          m.foreach {
+            case (CapIn(label, suffix, cap), inRow) =>
+              m.get(s"graft_${label}_out_$suffix").foreach { outRow =>
+                val in = inRow.getLong(0)
+                val out = outRow.getLong(0)
+                if (in > out) System.err.println(
+                  s"[graft] $label(max=$cap): dropped ${in - out} of $in " +
+                  "index entries over the key cap — candidate pairs are " +
+                  "lossy there (raise the cap or accept)")
+              }
+            case _ =>
           }
         }
         override def onFailure(funcName: String,

@@ -43,6 +43,21 @@ object SparkEntry {
     "graft_d19_band_index_" +
       dir.replaceAll("[^A-Za-z0-9]", "_").toLowerCase(java.util.Locale.ROOT)
 
+  /** d19's bucket cap: a band signature shared by more than 200 docs on
+    * one side is dropped there (m probe × n index docs would pair m×n).
+    */
+  private def d19Capped(banded: DataFrame): DataFrame =
+    Dedup.capDocFreq(banded, Some(200), Seq("band", "sig"), "bucketcap")
+
+  /** Write the corpus side of d19's band index, bucketed by the probe
+    * join key. The bucket cap runs here, at ingest: degenerate
+    * signatures are never stored, the report comes from the write job,
+    * and no probe re-aggregates the corpus-sized index.
+    */
+  private def writeD19Index(corpus: DataFrame, dir: String): Unit =
+    graft.sources.Sink.writeBucketed(d19Capped(corpus), d19IndexTable(dir),
+      Seq("band", "sig"), numBuckets = 8, sortCols = Seq("band", "sig"))
+
   /** Unrolled DuckDB replica of [[operators.Sampling.maxCoverageSelect]]:
     * k greedy rounds as chained CTEs — pick argmax-gain doc over
     * tokens not yet covered (tie: smallest id), union its tokens into
@@ -1354,37 +1369,24 @@ object SparkEntry {
     // gets a deterministic oracle (recall must be 1.0 at this SF)
     "d3_minhash_lsh" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      // one shingle explode feeds BOTH the LSH path and the exact
-      // ground truth — built once, persisted, shared
-      // r11: the index materializes PRE-HASHED — (id, shingle =
-      // xxhash64(s), h2 = xxhash64(1, s)), three longs instead of a
-      // shingle string (identical downstream values: the exact arm's
-      // join key IS xxhash64(s), and MinHash's two Carter-Wegman base
-      // hashes ARE (shingle, h2)). The doc-frequency cap runs BEFORE
-      // the key-partitioned materialization (guide §2.5: hot shingles
-      // never reach the shuffle that would concentrate them; its
-      // equality classes move from strings to 64-bit hashes — the
-      // hashedShingleIndex tradeoff, oracle-gated), and partitioning
-      // by `shingle` makes the exact arm's self-join exchange-free.
-      val rawIdx = operators.Materialize.eagerByKey(
-        Dedup.capDocFreq(
-          Dedup.shingleIndex(Dedup.fanOut(docs), "doc_id", "text", n = 3,
-              maxDocFreq = None, tokens = true)
-            .select(col("id"),
-              xxhash64(col("shingle")).as("shingle"),
-              xxhash64(lit(1), col("shingle")).as("h2")),
-          Some(50)),
-        col("shingle"))
+      // one pre-hashed shingle index (id, shingle, h2) feeds BOTH the
+      // LSH path and the exact ground truth — built once, capped,
+      // materialized by shingle (see Dedup.hashedShingleIndex)
+      val rawIdx = Dedup.hashedShingleIndex(docs, "doc_id", "text", n = 3,
+        tokens = true, maxDocFreq = Some(50), withH2 = true)
       // UNVERIFIED candidates are enough for recall-vs-exact: the
       // verified set is cand ∩ {jaccard≥0.8} and exact IS
       // {jaccard≥0.8}, so exact ∩ verified(cand) = exact ∩ cand — a
       // separate verify pipeline (2 hash joins + 3 aggregates) would
-      // recompute what the exact path below already computes
+      // recompute what the exact path below already computes.
+      // 8 bands × 4 rows: the banding S-curve's threshold
+      // (1/bands)^(1/rows) is 0.59, below the 0.8 target, so pairs at
+      // J = 0.8 collide with probability 0.98; 4 × 8 puts it at 0.84
+      // and misses 6 of sf0.1's 256 exact pairs
       val lsh = Dedup.minhashLshCandidatesFromIndex(rawIdx,
-        k = 32, bands = 4)
-      val exact = Dedup.ngramJaccardPairsFromIndex(
-        rawIdx.select(col("id"), col("shingle")),
-        threshold = 0.8).select("id_a", "id_b")
+        k = 32, bands = 8)
+      val exact = Dedup.ngramJaccardPairsFromIndex(rawIdx, threshold = 0.8)
+        .select("id_a", "id_b")
         // referenced twice below (n_exact + the semi-join probe):
         // materialize the small pair list so the exact pipeline — the
         // expensive half of this query — runs once (r10)
@@ -3232,29 +3234,18 @@ object SparkEntry {
     // double-counting the write): shingle the corpus, band the minhash
     // signatures, and write the index bucketed by the probe-join key
     // (band, sig) — every later incremental probe joins with zero
-    // Exchange on the index side, and the skew-cap aggregation rides
-    // the same pre-partitioning. At 100 TB this is the difference
+    // Exchange on the index side; the bucket cap applies at this write.
+    // At 100 TB this is the difference
     // between reshuffling the corpus-sized index per daily batch and
     // never reshuffling it. Output = a DuckDB-replayable summary of
     // the stored table: corpus docs carrying >=1 surviving shingle,
     // each contributing exactly `bands` (4) index rows.
     "d19_index_build" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      // pre-hashed (shingle, h2) index, cap before the keyed shuffle
-      // (r11: see d3_minhash_lsh)
-      val rawIdx = operators.Materialize.eagerByKey(
-        Dedup.capDocFreq(
-          Dedup.shingleIndex(Dedup.fanOut(docs), "doc_id", "text", n = 3,
-              maxDocFreq = None, tokens = true)
-            .select(col("id"),
-              xxhash64(col("shingle")).as("shingle"),
-              xxhash64(lit(1), col("shingle")).as("h2")),
-          Some(50)),
-        col("shingle"))
+      val rawIdx = Dedup.hashedShingleIndex(docs, "doc_id", "text", n = 3,
+        tokens = true, maxDocFreq = Some(50), withH2 = true)
       val banded = Dedup.bandSignatures(rawIdx, k = 32, bands = 4)
-      graft.sources.Sink.writeBucketed(banded.filter(!(col("id") % 10 === 0)),
-        d19IndexTable(dir), Seq("band", "sig"), numBuckets = 8,
-        sortCols = Seq("band", "sig"))
+      writeD19Index(banded.filter(!(col("id") % 10 === 0)), dir)
       s.table(d19IndexTable(dir))
         .agg(countDistinct("id").as("n_docs"),
           count(lit(1)).as("n_index_rows"))
@@ -3271,17 +3262,8 @@ object SparkEntry {
     // it IS the output the oracle checks).
     "d19_index_probe" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      // pre-hashed (shingle, h2) index, cap before the keyed shuffle
-      // (r11: see d3_minhash_lsh)
-      val rawIdx = operators.Materialize.eagerByKey(
-        Dedup.capDocFreq(
-          Dedup.shingleIndex(Dedup.fanOut(docs), "doc_id", "text", n = 3,
-              maxDocFreq = None, tokens = true)
-            .select(col("id"),
-              xxhash64(col("shingle")).as("shingle"),
-              xxhash64(lit(1), col("shingle")).as("h2")),
-          Some(50)),
-        col("shingle"))
+      val rawIdx = Dedup.hashedShingleIndex(docs, "doc_id", "text", n = 3,
+        tokens = true, maxDocFreq = Some(50), withH2 = true)
       val banded = operators.Materialize.eager(
         Dedup.bandSignatures(rawIdx, k = 32, bands = 4)) // index write + probe + caps share it
       val isBatch = col("id") % 10 === 0
@@ -3289,28 +3271,19 @@ object SparkEntry {
       // Bench/Verify name order); build it here only if probed
       // standalone so the entry stays self-contained
       if (!s.catalog.tableExists(d19IndexTable(dir)))
-        graft.sources.Sink.writeBucketed(banded.filter(!isBatch),
-          d19IndexTable(dir), Seq("band", "sig"), numBuckets = 8,
-          sortCols = Seq("band", "sig"))
-      val index = s.table(d19IndexTable(dir))
-      val probe = banded.filter(isBatch)    // today's arriving batch
-      // skew guard on BOTH sides: a degenerate signature shared by m
-      // probe docs and n index docs yields m×n candidates — cap each
-      // side like self-dedup banding caps the joint bucket
-      def keepOf(side: DataFrame) =
-        side.groupBy("band", "sig").agg(count(lit(1)).as("m"))
-          .filter(col("m") <= 200).select("band", "sig")
-      val cand = probe.join(keepOf(probe), Seq("band", "sig"))
-        .select(col("id").as("pid"), col("band"), col("sig"))
-        .join(index.join(keepOf(index), Seq("band", "sig"))
-          .select(col("id").as("cid"), col("band"), col("sig")),
+        writeD19Index(banded.filter(!isBatch), dir)
+      val index = s.table(d19IndexTable(dir)) // bucket-capped at ingest
+      // today's arriving batch under the same bucket cap, materialized so
+      // the cap's report survives an empty candidate set; unkeyed, so it
+      // shuffles into the index's bucketing and the index side does not
+      val probe = operators.Materialize.eager(d19Capped(banded.filter(isBatch)))
+      val cand = probe.select(col("id").as("pid"), col("band"), col("sig"))
+        .join(index.select(col("id").as("cid"), col("band"), col("sig")),
           Seq("band", "sig"))
         .select(least(col("pid"), col("cid")).as("id_a"),
           greatest(col("pid"), col("cid")).as("id_b"))
         .distinct()
-      val exact = Dedup.ngramJaccardPairsFromIndex(
-          rawIdx.select(col("id"), col("shingle")),
-          threshold = 0.8)
+      val exact = Dedup.ngramJaccardPairsFromIndex(rawIdx, threshold = 0.8)
         .filter((col("id_a") % 10 === 0) =!= (col("id_b") % 10 === 0))
         .select("id_a", "id_b")
         // referenced twice (count + semi-join probe): materialize the

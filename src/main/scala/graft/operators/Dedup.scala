@@ -101,58 +101,68 @@ object Dedup {
     * the shuffle bytes), drop doc-frequency-capped hot shingles, then
     * materialize hash-partitioned BY THE JOIN KEY (guide §2.4 "two
     * operations keyed the same way can share one exchange") — the
-    * sizes aggregate and both self-join sides all key on `shingle`,
-    * and the checkpoint's LogicalRDD preserves outputPartitioning, so
-    * the one shuffle paid here replaces every consumer-side exchange.
+    * self-join sides key on `shingle` and the table is declared
+    * partitioned by it, so the one shuffle paid here replaces both
+    * join-side exchanges.
     * One place to change the hashing/persistence discipline.
     *
-    * SKEW ORDER (r11, VERDICT r10 task 2 / guide §2.5): the cap runs
-    * BEFORE the key-repartition, so every occurrence of a hot shingle
-    * (a boilerplate span in ~all docs) is dropped before the shuffle
-    * that would concentrate it into one partition at materialization.
-    * The cap's frequency aggregate reads the lazy explode with
-    * map-side partial aggregation (the skew-absorbing shape) as a
-    * broadcast subtree of the SAME materialization job — the explode
-    * is evaluated twice inside that one job (bounded; no cross-query
-    * cold-cache race, which was the r10 problem), and hot rows are
-    * never materialized or shuffled at all.
+    * `withH2` adds MinHash's second Carter-Wegman base hash
+    * `h2 = xxhash64(1, s)` (`shingle` is the first): the signature
+    * values are bit-identical to hashing the strings downstream, but
+    * the materialized index stays three fixed-width longs, and its
+    * LongType `shingle` is what tells [[minhashSignaturesFromIndex]]
+    * the index is pre-hashed.
+    *
+    * SKEW ORDER (guide §2.5): the cap runs BEFORE the key-repartition,
+    * so every occurrence of a hot shingle (a boilerplate span in ~all
+    * docs) is dropped before the shuffle that would concentrate it
+    * into one partition at materialization. The cap's frequency
+    * aggregate reads the lazy explode with map-side partial
+    * aggregation as a broadcast subtree of the SAME materialization
+    * job, and its in/out report lands on that job, which always runs
+    * to completion (no downstream AQE pruning can drop it).
     */
   private[graft] def hashedShingleIndex(df: DataFrame, idCol: String,
                                         textCol: String, n: Int,
                                         tokens: Boolean,
-                                        maxDocFreq: Option[Int] = None): DataFrame = {
+                                        maxDocFreq: Option[Int] = None,
+                                        withH2: Boolean = false): DataFrame = {
+    val s = col("shingle")
+    val h2 = if (withH2) Seq(xxhash64(lit(1), s).as("h2")) else Nil
     val hashed = shingleIndex(fanOut(df), idCol, textCol, n, None, tokens)
-      .select(col("id"), xxhash64(col("shingle")).as("shingle"))
-    Materialize.eagerByKey(capDocFreq(hashed, maxDocFreq), col("shingle"))
+      .select(Seq(col("id"), xxhash64(s).as("shingle")) ++ h2: _*)
+    Materialize.eagerByKey(capDocFreq(hashed, maxDocFreq), "shingle")
   }
 
-  /** Drop index entries whose shingle occurs in more than `cap` docs —
-    * the skew control for inverted-index self-joins (a shingle in k
-    * docs contributes k² candidate pairs; boilerplate spans push k to
-    * corpus scale). The heavy-hitter list is bounded by |index| / cap,
-    * so it broadcasts; the kept set (~vocabulary-sized) never moves.
-    * Call on a persisted index: the doc-frequency aggregate and the
-    * anti-join probe both re-read the cache instead of re-exploding.
+  /** Drop index entries whose key occurs in more than `cap` entries —
+    * the one skew control for every inverted-index pair operator (a
+    * key shared by k entries contributes k² candidate pairs;
+    * boilerplate shingles, degenerate LSH buckets and stop-word
+    * fingerprints push k to corpus scale). The heavy-hitter list is
+    * bounded by |index| / cap, so it broadcasts; the kept set never
+    * moves. Output columns keep the input's order.
+    *
+    * No silent caps: input and output entry counts are observed in
+    * the SAME pass (no extra job) as `graft_<label>_{in,out}_<tag>_<cap>`;
+    * Engine's session listener turns a pair with in > out into a
+    * `[graft] <label>` stderr line. Run the cap before a
+    * materialization ([[Materialize.eagerByKey]] on the join keys) when
+    * it feeds a self-join: the report then comes from a job that always
+    * completes, where a lazy cap under an empty pair set is pruned
+    * away by AQE's empty-relation propagation, observers and all.
     */
-  def capDocFreq(idx: DataFrame, cap: Option[Int]): DataFrame = cap match {
+  def capDocFreq(idx: DataFrame, cap: Option[Int],
+                 keys: Seq[String] = Seq("shingle"),
+                 label: String = "cap"): DataFrame = cap match {
     case None => idx
     case Some(c) =>
-      val hot = idx.groupBy("shingle").agg(count(lit(1)).as("df"))
-        .filter(col("df") > c).select("shingle")
-      // no-silent-caps (VERDICT r7 task 6): the cap is byte-identical
-      // at test SFs but silently lossy beyond — observe input and
-      // output entry counts in the SAME pass (no extra job) so every
-      // run reports when the cap binds. Engine's session listener
-      // turns the pair into a `[graft] capDocFreq ...` log line; specs
-      // read queryExecution.observedMetrics directly.
+      val hot = idx.groupBy(keys.map(col): _*).agg(count(lit(1)).as("df"))
+        .filter(col("df") > c).select(keys.map(col): _*)
       val tag = capObsCounter.incrementAndGet()
-      // re-select in the input's column order: a USING join moves the
-      // key to the front, which would silently break downstream
-      // positional renames (toDF)
-      idx.observe(s"graft_cap_in_${tag}_$c", count(lit(1)).as("n"))
-        .join(broadcast(hot), Seq("shingle"), "left_anti")
+      idx.observe(s"graft_${label}_in_${tag}_$c", count(lit(1)).as("n"))
+        .join(broadcast(hot), keys, "left_anti")
         .select(idx.columns.map(col).toIndexedSeq: _*)
-        .observe(s"graft_cap_out_${tag}_$c", count(lit(1)).as("n"))
+        .observe(s"graft_${label}_out_${tag}_$c", count(lit(1)).as("n"))
   }
 
   /** Unique tag per cap site so several caps in one plan keep their
@@ -160,6 +170,48 @@ object Dedup {
     * within a query).
     */
   private val capObsCounter = new java.util.concurrent.atomic.AtomicLong
+
+  /** `df` with every column except `keep` renamed `<c>_<side>` — one
+    * side of a by-name pair join.
+    */
+  private[graft] def suffixed(df: DataFrame, side: String,
+                              keep: Seq[String] = Nil): DataFrame =
+    df.select(df.columns.toSeq.map(c =>
+      if (keep.contains(c)) col(c) else col(c).as(s"${c}_$side")): _*)
+
+  /** Every pair of index entries sharing all `keys`, once per shared
+    * key, as `id_a < id_b` — the one candidate generator of the
+    * inverted-index pair operators (shingles, LSH bands and buckets,
+    * simhash blocks, fingerprints, k-means cells). Columns are matched
+    * BY NAME: the keys stay as they are, every other column comes back
+    * as `<c>_a` / `<c>_b`, so a reordered index cannot swap columns.
+    * Callers add their predicate, then `distinct` or count. Pass an
+    * index materialized by `keys` ([[Materialize.eagerByKey]]) and
+    * neither join side needs an exchange.
+    */
+  def pairsSharing(index: DataFrame, keys: Seq[String]): DataFrame =
+    suffixed(index, "a", keys).join(suffixed(index, "b", keys), keys)
+      .filter(col("id_a") < col("id_b"))
+
+  /** Jaccard of counted pairs `(id_a, id_b, n_common)` over the
+    * `(id, ...)` index they were counted from: |A∪B| comes from the
+    * per-doc entry counts, so no second pass over the text.
+    */
+  private def jaccardOf(idx: DataFrame, common: DataFrame,
+                        threshold: Double): DataFrame = {
+    // sizes has one row per document: never force a broadcast (O(corpus)
+    // driver memory at scale) — AQE broadcasts when it actually fits,
+    // shuffle-joins otherwise
+    val sizes = idx.groupBy("id").agg(count(lit(1)).as("sz"))
+    common
+      .join(suffixed(sizes, "a"), "id_a")
+      .join(suffixed(sizes, "b"), "id_b")
+      .withColumn("jaccard",
+        col("n_common").cast("double")
+          / (col("sz_a") + col("sz_b") - col("n_common")).cast("double"))
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard")
+  }
 
   // ---- n-gram Jaccard -----------------------------------------------
 
@@ -185,19 +237,24 @@ object Dedup {
     *
     * Scale shape: the d2 inverted index verbatim — per-doc-distinct
     * hashed shingles, key-partitioned self-join, `maxDocFreq` skew cap
-    * — only the denominator changes (|A| instead of the union).
+    * — only the denominator changes (|A| instead of the union). The
+    * shared-shingle count is symmetric, so it is counted once per
+    * unordered pair and then emitted in both directions.
     */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        n: Int, threshold: Double,
                        maxDocFreq: Option[Int] = None,
                        tokens: Boolean = false): DataFrame = {
     val capped = hashedShingleIndex(df, idCol, textCol, n, tokens, maxDocFreq)
-    val sizes = capped.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val common = capped.toDF("id_a", "shingle")
-      .join(capped.toDF("id_b", "shingle"), "shingle")
-      .filter(col("id_a") =!= col("id_b")) // directed: both orders kept
+    val sizes = capped.groupBy("id").agg(count(lit(1)).as("sz"))
+    val common = pairsSharing(capped, Seq("shingle"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
-    common.join(sizes.toDF("id_a", "sz_a"), "id_a")
+      .select(explode(array(
+        struct(col("id_a"), col("id_b"), col("n_common")),
+        struct(col("id_b").as("id_a"), col("id_a").as("id_b"),
+          col("n_common")))).as("p"))
+      .select("p.id_a", "p.id_b", "p.n_common")
+    common.join(suffixed(sizes, "a"), "id_a")
       .withColumn("containment",
         col("n_common").cast("double") / col("sz_a").cast("double"))
       .filter(col("containment") >= threshold)
@@ -283,31 +340,29 @@ object Dedup {
     // all-integer, still lossless, and it cuts the verify-join input
     // on clone-heavy data where the length filter alone passes
     // everything.
-    val cands = prefix.toDF("doc_a", "tok", "na", "pa")
-      .join(prefix.toDF("doc_b", "tok", "nb", "pb"), "tok")
-      .filter(col("doc_a") < col("doc_b") &&
-        lit(tDen) * col("na") >= lit(tNum) * col("nb") &&
-        lit(tDen) * col("nb") >= lit(tNum) * col("na"))
-      .groupBy("doc_a", "doc_b")
-      .agg(min("pa").as("pa"), min("pb").as("pb"),
-        first("na").as("na"), first("nb").as("nb"))
+    val cands = pairsSharing(prefix, Seq("tok"))
+      .filter(lit(tDen) * col("n_a") >= lit(tNum) * col("n_b") &&
+        lit(tDen) * col("n_b") >= lit(tNum) * col("n_a"))
+      .groupBy("id_a", "id_b")
+      .agg(min("rn_a").as("pa"), min("rn_b").as("pb"),
+        first("n_a").as("na"), first("n_b").as("nb"))
       .filter(lit(tNum + tDen) *
         (lit(1L) + least(col("na") - col("pa"), col("nb") - col("pb"))) >=
         lit(tNum) * (col("na") + col("nb")))
-      .select("doc_a", "doc_b")
+      .select("id_a", "id_b")
     // exact verify on candidates only: intersection by re-joining the
     // full token sets of each side
     val inter = cands
-      .join(toks.toDF("doc_a", "tok"), "doc_a")
-      .join(toks.toDF("doc_b", "tok"), Seq("doc_b", "tok"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_inter"))
+      .join(suffixed(toks, "a", Seq("tok")), "id_a")
+      .join(suffixed(toks, "b", Seq("tok")), Seq("id_b", "tok"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_inter"))
     inter
-      .join(sizes.toDF("doc_a", "na"), "doc_a")
-      .join(sizes.toDF("doc_b", "nb"), "doc_b")
+      .join(suffixed(sizes, "a"), "id_a")
+      .join(suffixed(sizes, "b"), "id_b")
       .filter(lit(tDen + tNum) * col("n_inter") >=
-        lit(tNum) * (col("na") + col("nb")))
-      .select(col("doc_a"), col("doc_b"), col("n_inter"),
-        (col("na") + col("nb") - col("n_inter")).as("n_union"))
+        lit(tNum) * (col("n_a") + col("n_b")))
+      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
+        col("n_inter"), (col("n_a") + col("n_b") - col("n_inter")).as("n_union"))
   }
 
   /** Directed CONTAINMENT near-dup pairs — the asymmetric case Jaccard
@@ -406,9 +461,11 @@ object Dedup {
     // counts (toks is per-doc distinct), a fraction of the shuffle.
     val docArrays = toks.groupBy("id")
       .agg(collect_list(col("tok")).as("toks"))
+    def arraysOf(side: String) = docArrays.select(
+      col("id").as(s"doc_$side"), col("toks").as(s"toks_$side"))
     cands
-      .join(docArrays.toDF("doc_a", "toks_a"), "doc_a")
-      .join(docArrays.toDF("doc_b", "toks_b"), "doc_b")
+      .join(arraysOf("a"), "doc_a")
+      .join(arraysOf("b"), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         size(array_intersect(col("toks_a"), col("toks_b")))
           .cast("long").as("n_inter"),
@@ -434,13 +491,8 @@ object Dedup {
                         textCol: String = "text", n: Int = 8,
                         minShared: Int = 1,
                         maxDocFreq: Option[Int] = None): DataFrame = {
-    val idx = hashedShingleIndex(docs, idCol, textCol, n, tokens = true,
-        maxDocFreq)
-      .select(col("id"), col("shingle").as("h"))
-    val a = idx.toDF("id_a", "h")
-    val b = idx.toDF("id_b", "h")
-    a.join(b, "h")
-      .filter(col("id_a") < col("id_b"))
+    pairsSharing(hashedShingleIndex(docs, idCol, textCol, n, tokens = true,
+        maxDocFreq), Seq("shingle"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
   }
@@ -457,23 +509,9 @@ object Dedup {
     * w.h.p. (collision odds ~n²/2⁶⁴), a fraction of the shuffle bytes.
     */
   def ngramJaccardPairsFromIndex(idx: DataFrame, threshold: Double): DataFrame = {
-    val sizes = idx.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val a = idx.toDF("id_a", "shingle")
-    val b = idx.toDF("id_b", "shingle")
-    val common = a.join(b, "shingle")
-      .filter(col("id_a") < col("id_b"))
+    val common = pairsSharing(idx, Seq("shingle"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
-    // sizes has one row per document: never force a broadcast (O(corpus)
-    // driver memory at scale) — AQE broadcasts when it actually fits,
-    // shuffle-joins otherwise (round-1 ADVICE)
-    common
-      .join(sizes.toDF("id_a", "sz_a"), "id_a")
-      .join(sizes.toDF("id_b", "sz_b"), "id_b")
-      .withColumn("jaccard",
-        col("n_common").cast("double")
-          / (col("sz_a") + col("sz_b") - col("n_common")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    jaccardOf(idx, common, threshold)
   }
 
   /** d22's candidate generator: [[ngramJaccardPairs]] with a length
@@ -502,24 +540,14 @@ object Dedup {
         length(col(textCol)).cast(LongType).as("len"),
         explode(shinglesOf(col(textCol), n, tokens)).as("shingle"))
       .select(col("id"), col("len"), xxhash64(col("shingle")).as("shingle"))
-    // cap BEFORE the key-partitioned materialization (r11): see
+    // cap BEFORE the key-partitioned materialization: see
     // hashedShingleIndex — hot shingles never reach the keyed shuffle
     val capped = Materialize.eagerByKey(
-      capDocFreq(raw, maxDocFreq), col("shingle"))
-    val sizes = capped.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val common = capped.toDF("id_a", "len_a", "shingle")
-      .join(capped.toDF("id_b", "len_b", "shingle"), "shingle")
-      .filter(col("id_a") < col("id_b") &&
-        abs(col("len_a") - col("len_b")) <= maxLenDiff)
+      capDocFreq(raw, maxDocFreq), "shingle")
+    val common = pairsSharing(capped, Seq("shingle"))
+      .filter(abs(col("len_a") - col("len_b")) <= maxLenDiff)
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
-    common
-      .join(sizes.toDF("id_a", "sz_a"), "id_a")
-      .join(sizes.toDF("id_b", "sz_b"), "id_b")
-      .withColumn("jaccard",
-        col("n_common").cast("double")
-          / (col("sz_a") + col("sz_b") - col("n_common")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    jaccardOf(capped, common, threshold)
   }
 
   // ---- MinHash + LSH -------------------------------------------------
@@ -536,36 +564,38 @@ object Dedup {
     minhashSignaturesFromIndex(
       shingleIndex(df, idCol, textCol, n, None, tokens), k)
 
-  /** Signatures from a prebuilt `(id, shingle: string)` index, as one
+  /** Signatures from a prebuilt `(id, shingle)` index, as one
     * `sig: array<bigint>` column of length k — a single
     * [[graft.plans.MinHashAgg]] buffer instead of k separate min
     * aggregate columns, so the partial-aggregation row through the
     * shuffle is one blob and the plan width is k-independent (matters at
     * production k of 128-256 permutations). Hash evaluation stays in the
     * upstream codegen'd projection; the aggregate reads two long fields.
+    *
+    * A string `shingle` is hashed here; a LongType `shingle` marks the
+    * pre-hashed index of [[hashedShingleIndex]] (`withH2 = true`),
+    * whose `shingle` and `h2` columns already ARE the two base hashes —
+    * bit-identical signatures either way.
     */
   def minhashSignaturesFromIndex(rawIdx: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.GraftSqlBridge
-    // r11: a PRE-HASHED index (id, shingle = xxhash64(s), h2 =
-    // xxhash64(1, s)) carries both Carter-Wegman base hashes as longs —
-    // the signature values are BIT-IDENTICAL (same hashes, computed in
-    // the index-build projection instead of here), but the
-    // materialized index is three fixed-width longs instead of a
-    // shingle string, so every consumer scan reads a fraction of the
-    // bytes. A plain (id, shingle: string) index hashes here as before.
-    val idx =
-      if (rawIdx.columns.contains("h2"))
-        rawIdx.withColumnRenamed("shingle", "h1")
-      else rawIdx
-        .withColumn("h1", xxhash64(col("shingle")))
-        .withColumn("h2", xxhash64(lit(1), col("shingle")))
+    val h2 =
+      if (prehashed(rawIdx)) col("h2") else xxhash64(lit(1), col("shingle"))
     val agg = GraftSqlBridge.column(
       graft.plans.MinHashAgg(
         GraftSqlBridge.expression(col("h1")),
         GraftSqlBridge.expression(col("h2")), k)
         .toAggregateExpression(isDistinct = false))
-    idx.groupBy("id").agg(agg.as("sig"))
+    rawIdx.select(col("id"), shingleHash(rawIdx).as("h1"), h2.as("h2"))
+      .groupBy("id").agg(agg.as("sig"))
   }
+
+  private def prehashed(idx: DataFrame): Boolean =
+    idx.schema("shingle").dataType == LongType
+
+  /** The 64-bit shingle hash `xxhash64(s)` of either index form. */
+  private def shingleHash(idx: DataFrame): Column =
+    if (prehashed(idx)) col("shingle") else xxhash64(col("shingle"))
 
   /** Candidate pairs via banding: signature split into `bands` bands of
     * k/bands rows; docs agreeing on any whole band collide. Collisions
@@ -579,30 +609,10 @@ object Dedup {
                       maxBucket: Int = 200,
                       maxDocFreq: Option[Int] = None): DataFrame =
     minhashLshPairsFromIndex(
-      capDocFreq(
-        // eager PRE-HASHED index (r11): both Carter-Wegman base hashes
-        // are computed from the shingle strings in the one explode
-        // projection and materialized as three longs — identical
-        // signature/verify values, a fraction of the bytes per
-        // consumer scan. Fan-width round-robin partitioning keeps hot
-        // shingles spread at materialization (guide §2.5); the cap's
-        // equality classes move from strings to 64-bit hashes (the
-        // hashedShingleIndex tradeoff, oracle-gated).
-        Materialize.eager(shingleIndex(fanOut(df), idCol, textCol, n,
-            None, tokens)
-          .select(col("id"), xxhash64(col("shingle")).as("shingle"),
-            xxhash64(lit(1), col("shingle")).as("h2"))),
-        maxDocFreq),
+      hashedShingleIndex(df, idCol, textCol, n, tokens, maxDocFreq,
+        withH2 = true),
       k, bands, verifyThreshold, maxBucket)
 
-  /** LSH pairs from a prebuilt `(id, shingle)` index. Candidate pairs
-    * are verified EXACTLY against the same index that fed the
-    * signatures (per-doc 64-bit token arrays, intersection via the
-    * codegen'd array_intersect — |cands| verify rows, never the
-    * exploded |cands|·doc-len form), so a `maxDocFreq`-capped index
-    * yields a self-consistent (signatures, verification, ground truth)
-    * triple and the raw text is never re-shingled.
-    */
   /** `(id, band, sig)` band-bucket table from a `(id, shingle)` index —
     * the LSH index a production corpus PERSISTS (bands × corpus rows,
     * three small columns): build it once on ingest, then any later
@@ -629,64 +639,50 @@ object Dedup {
     * an exact pair set makes a separate Jaccard verify redundant:
     * exact ∩ verified(cand) = exact ∩ cand). Production dedup wants
     * [[minhashLshPairsFromIndex]], which verifies.
+    *
+    * Skew guard: a bucket of m docs yields m² candidate pairs, so
+    * buckets over `maxBucket` docs (non-discriminative signatures) are
+    * dropped by the bucket cap. The band table is materialized first —
+    * the signature aggregate runs once, not once per cap branch — and
+    * the cap then runs in the job that materializes it by (band, sig):
+    * its report survives an empty candidate set, and both self-join
+    * sides read the one key-partitioned table.
     */
   def minhashLshCandidatesFromIndex(rawIdx: DataFrame, k: Int, bands: Int,
                                     maxBucket: Int = 200): DataFrame = {
-    val banded = bandSignatures(rawIdx, k, bands)
-    // skew guard: a bucket of m docs yields m² candidate pairs — drop
-    // degenerate buckets (non-discriminative signatures) outright.
-    // r11 (guide §2.4 "window partitioned like the aggregation needs
-    // no second shuffle"): the bucket size is a COUNT WINDOW over
-    // (band, sig) instead of the r10 aggregate + semi-join-back — one
-    // pass over one (band, sig) exchange that the self-join below
-    // reuses (ReuseExchange: both sides are the same subtree), so the
-    // r10 eager persist + count() barrier that existed only to stop
-    // the aggregate and the join sides racing a cold cache is gone
-    // (with it, the ADVICE-flagged build-time side effect). The
-    // MinHashAgg signature pass runs once, under the reused exchange.
-    // no-silent-caps: in/out counts observed around the window filter
-    // (the capDocFreq pattern); the filter reads the window column, so
-    // Catalyst cannot push it below the window (or the in-observe).
-    val tag = capObsCounter.incrementAndGet()
-    val wBucket = org.apache.spark.sql.expressions.Window
-      .partitionBy("band", "sig")
-    val bounded = banded
-      .observe(s"graft_bucketcap_in_${tag}_$maxBucket", count(lit(1)).as("n"))
-      .withColumn("__m", count(lit(1)).over(wBucket))
-      .filter(col("__m") <= maxBucket)
-      .drop("__m")
-      .observe(s"graft_bucketcap_out_${tag}_$maxBucket", count(lit(1)).as("n"))
-    bounded.toDF("band", "sig", "id_a")
-      .join(bounded.toDF("band", "sig", "id_b"), Seq("band", "sig"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    val keys = Seq("band", "sig")
+    val banded = Materialize.eagerByKey(
+      capDocFreq(Materialize.eager(bandSignatures(rawIdx, k, bands)),
+        Some(maxBucket), keys, "bucketcap"),
+      keys: _*)
+    pairsSharing(banded, keys).select("id_a", "id_b").distinct()
   }
 
+  /** LSH pairs from a prebuilt `(id, shingle)` index. Candidate pairs
+    * are verified EXACTLY against the same index that fed the
+    * signatures, so a `maxDocFreq`-capped index yields a
+    * self-consistent (signatures, verification, ground truth) triple
+    * and the raw text is never re-shingled.
+    */
   def minhashLshPairsFromIndex(rawIdx: DataFrame,
                                k: Int, bands: Int,
                                verifyThreshold: Double,
                                maxBucket: Int = 200): DataFrame = {
     val cand = minhashLshCandidatesFromIndex(rawIdx, k, bands, maxBucket)
     // exact verify on candidates via per-doc 64-bit token ARRAYS and
-    // the codegen'd array_intersect (the d26 rework's lesson): the old
-    // exploded form joined each candidate against the full index,
+    // the codegen'd array_intersect (the d26 rework's lesson): the
+    // exploded form would join each candidate against the full index,
     // shuffling |cands| × avg-doc-len rows into a groupBy — on
     // duplicate-heavy corpora where banding legitimately yields
     // millions of candidates that is billions of rows. The array form
     // joins |cands| rows against one per-doc array relation; same
     // intersection counts (the index is per-doc distinct).
-    // pre-hashed index (r11): `shingle` already IS xxhash64(s) — reuse
-    // it instead of hashing the hash (values identical either way
-    // within each form; the per-doc distinct set is what the verify
-    // intersects)
-    val h = (if (rawIdx.columns.contains("h2"))
-        rawIdx.select(col("id"), col("shingle").as("h"))
-      else rawIdx.select(col("id"), xxhash64(col("shingle")).as("h")))
+    val docArrays = rawIdx.select(col("id"), shingleHash(rawIdx).as("h"))
       .distinct()
-    val docArrays = h.groupBy("id").agg(collect_list(col("h")).as("hs"))
+      .groupBy("id").agg(collect_list(col("h")).as("hs"))
     cand
-      .join(docArrays.toDF("id_a", "hs_a"), "id_a")
-      .join(docArrays.toDF("id_b", "hs_b"), "id_b")
+      .join(suffixed(docArrays, "a"), "id_a")
+      .join(suffixed(docArrays, "b"), "id_b")
       .select(col("id_a"), col("id_b"),
         size(array_intersect(col("hs_a"), col("hs_b")))
           .cast("long").as("n_common"),
@@ -756,7 +752,7 @@ object Dedup {
           struct(col("src"), col("dst")),
           struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst")),
-      col("dst"))
+      "dst")
     // init = one propagation round for free (r10): the identity
     // labeling's first loop round computes exactly
     // min(id, min over neighbors) — but that value is available from
@@ -1097,11 +1093,9 @@ object Dedup {
     val side = Materialize.eagerByKey(
       emb.join(assign, idCol)
         .select(col("cluster"), col(idCol).as("id"), col(vecCol).as("v")),
-      col("cluster"))
-    side.toDF("cluster", "id_a", "va")
-      .join(side.toDF("cluster", "id_b", "vb"), Seq("cluster"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(Similarity.cosine(col("va"), col("vb")) >= threshold)
+      "cluster")
+    pairsSharing(side, Seq("cluster"))
+      .filter(Similarity.cosine(col("v_a"), col("v_b")) >= threshold)
       .select("id_a", "id_b")
   }
 
@@ -1217,12 +1211,11 @@ object Dedup {
           shiftright(col("simhash"), start).bitwiseAND(mask).as("key"))
       }: _*)).as("bk"))
       .select(col("id"), col("simhash"), col("bk.blk"), col("bk.key"))
-    val cand = blocks.toDF("id_a", "sh_a", "blk", "key")
-      .join(blocks.toDF("id_b", "sh_b", "blk", "key"), Seq("blk", "key"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "sh_a", "sh_b").distinct()
+    val cand = pairsSharing(blocks, Seq("blk", "key"))
+      .select("id_a", "id_b", "simhash_a", "simhash_b").distinct()
     cand
-      .withColumn("dist", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
+      .withColumn("dist",
+        bit_count(col("simhash_a").bitwiseXOR(col("simhash_b"))))
       .filter(col("dist") <= maxDist)
       .select("id_a", "id_b", "dist")
   }
@@ -1278,19 +1271,18 @@ object Dedup {
   /** Winnowing near-dup pairs: shared-fingerprint counts over the
     * [[winnowFingerprints]] inverted index, with the standard
     * document-frequency skew cap (a fingerprint in every doc is
-    * boilerplate, not evidence). Returns `(id_a, id_b, n_common)`
-    * with `n_common >= minCommon`.
+    * boilerplate, not evidence) run before the index materializes by
+    * fingerprint. Returns `(id_a, id_b, n_common)` with
+    * `n_common >= minCommon`.
     */
   def winnowPairs(docs: DataFrame, idCol: String, textCol: String,
                   k: Int = 3, w: Int = 4, minCommon: Int = 5,
                   maxDocFreq: Int = 50): DataFrame = {
-    val fps = winnowFingerprints(docs, idCol, textCol, k, w)
-    val hot = fps.groupBy("fp").agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDocFreq).select("fp")
-    val capped = fps.join(broadcast(hot), Seq("fp"), "left_anti")
-    capped.select(col("fp"), col("id").as("id_a"))
-      .join(capped.select(col("fp"), col("id").as("id_b")), Seq("fp"))
-      .filter(col("id_a") < col("id_b"))
+    val fps = Materialize.eagerByKey(
+      capDocFreq(winnowFingerprints(docs, idCol, textCol, k, w),
+        Some(maxDocFreq), Seq("fp")),
+      "fp")
+    pairsSharing(fps, Seq("fp"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
       .filter(col("n_common") >= minCommon)
   }

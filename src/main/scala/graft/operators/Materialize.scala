@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** The ONE place the engine materializes a multi-consumer intermediate
   * (r11 consolidation of the ~20 r10 call sites — one definition, one
@@ -51,20 +52,25 @@ object Materialize {
 
   /** [[eager]] after hash-partitioning by `keys` (guide §2.4 "two
     * operations keyed the same way can share one exchange"): the
-    * checkpoint's LogicalRDD preserves outputPartitioning, so the one
+    * returned table is declared hash-partitioned by `keys`, so the one
     * shuffle paid at materialization replaces the exchange of EVERY
     * downstream consumer that aggregates/joins on `keys` — aggregate +
-    * both self-join sides, in the index-shaped operators. Width follows
-    * `spark.sql.shuffle.partitions` (AQE-coalesced locally), never a
-    * local constant.
+    * both self-join sides, in the index-shaped operators. Width is
+    * `spark.sql.shuffle.partitions`, never a local constant; AQE does
+    * not coalesce this shuffle, since the declared layout must match
+    * the data exactly. The cost: Spark compares a declared scan's
+    * partitioning with its attribute ids, so the two instances of the
+    * table in a self-join never share an exchange above them — a
+    * subtree derived from it and joined to both sides (the pair
+    * operators' per-doc sizes) runs once per side.
     *
     * SKEW (guide §2.5): partitioning by key ships every occurrence of a
     * hot key to one partition — callers with skew-prone keys must drop
     * hot keys BEFORE calling this (see Dedup.hashedShingleIndex: the
-    * doc-frequency cap runs upstream of this shuffle since r11).
+    * doc-frequency cap runs upstream of this shuffle).
     */
-  def eagerByKey(df: DataFrame, keys: Column*): DataFrame =
-    eager(df.repartition(keys: _*))
+  def eagerByKey(df: DataFrame, keys: String*): DataFrame =
+    byKey(df, keys, sorted = false)
 
   /** [[eagerByKey]] + in-partition sort — for loop-invariant relations
     * consumed by a sort-merge join keyed on `keys` every iteration
@@ -72,9 +78,18 @@ object Materialize {
     * relation-side exchange AND sort in every round, so the big
     * invariant relation is shuffled once per run, not once per round.
     */
-  def eagerByKeySorted(df: DataFrame, keys: Column*): DataFrame =
-    eager(df.repartition(keys: _*)
-      .sortWithinPartitions(keys: _*))
+  def eagerByKeySorted(df: DataFrame, keys: String*): DataFrame =
+    byKey(df, keys, sorted = true)
+
+  private def byKey(df: DataFrame, keys: Seq[String],
+                    sorted: Boolean): DataFrame = {
+    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val parted = df.repartition(n, keys.map(col): _*)
+    val done = eager(
+      if (sorted) parted.sortWithinPartitions(keys.map(col): _*) else parted)
+    org.apache.spark.sql.GraftSqlBridge.declareHashPartitioned(
+      done, keys, n, sorted)
+  }
 
   /** Expand-only fan-out for CPU-bound per-row stages (r10, guide
     * §2.5 input-skew / §2.6 idle capacity): single-file test inputs

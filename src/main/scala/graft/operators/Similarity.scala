@@ -311,28 +311,20 @@ object Similarity {
       .select(col("id"),
         posexplode(lshBucketsAll(col("v"), dim, bits, tables))
           .as(Seq("tbl", "bucket")))
-    // r11 (guide §2.4, the minhashLshCandidatesFromIndex rework): the
-    // bucket-size cap is a COUNT WINDOW over (tbl, bucket) instead of
-    // the r10 aggregate + semi-join back onto an eagerly-checkpointed
-    // bucket table — one (tbl, bucket) exchange that the self-join
-    // below reuses (both sides are the same subtree), so the explode
-    // runs once under the reused exchange and the materialization
-    // barrier disappears with the three consumer passes it served.
-    val wBucket = org.apache.spark.sql.expressions.Window
-      .partitionBy("tbl", "bucket")
-    val bounded = bucketed
-      .withColumn("__m", count(lit(1)).over(wBucket))
-      .filter(col("__m") <= maxBucket)
-      .drop("__m")
-    val pairs = bounded.toDF("tbl", "bucket", "id_a")
-      .join(bounded.toDF("tbl", "bucket", "id_b"), Seq("tbl", "bucket"))
-      .filter(col("id_a") < col("id_b"))
+    // the bucket cap runs in the job that materializes the bucket table
+    // by (tbl, bucket): its report survives an empty pair set, and both
+    // self-join sides read the one key-partitioned table
+    val keys = Seq("tbl", "bucket")
+    val bounded = Materialize.eagerByKey(
+      Dedup.capDocFreq(bucketed, Some(maxBucket), keys, "bucketcap"),
+      keys: _*)
+    val pairs = Dedup.pairsSharing(bounded, keys)
       .select("id_a", "id_b")
       .distinct()
     pairs
-      .join(side.toDF("id_a", "va"), Seq("id_a"))
-      .join(side.toDF("id_b", "vb"), Seq("id_b"))
-      .withColumn("cosine", cosine(col("va"), col("vb")))
+      .join(Dedup.suffixed(side, "a"), Seq("id_a"))
+      .join(Dedup.suffixed(side, "b"), Seq("id_b"))
+      .withColumn("cosine", cosine(col("v_a"), col("v_b")))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
   }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Streaming constructs mirroring the reference's TVFs (SURVEY §2.8) on
   * Structured Streaming:
@@ -67,6 +67,31 @@ object Streams {
         try f finally spark.conf.set("spark.sql.shuffle.partitions", old)
     }
 
+  /** Run `df` to completion into a memory sink named `queryName` (state
+    * partitions per [[withStatePartitions]]) and return the drained
+    * table — the one drain every runner here uses. `finish` runs once
+    * the query has stopped, also when the drain failed: assertions on
+    * its progress, cleanup of staged input.
+    *
+    * TEST-HARNESS DRAIN, not the production sink: a memory sink
+    * materializes the whole result table on the driver, which is
+    * exactly what you don't do at scale. The production shape is
+    * update/append mode + watermark into a real sink (kafka/delta/
+    * parquet), where state and output stay partitioned across
+    * executors; only the drain differs, the query plan is identical.
+    */
+  private def drain(spark: SparkSession, df: DataFrame, mode: String,
+                    queryName: String,
+                    finish: StreamingQuery => Unit = _ => ()): DataFrame = {
+    val q = withStatePartitions(spark)(df.writeStream
+      .outputMode(mode)
+      .format("memory")
+      .queryName(queryName)
+      .start())
+    try q.processAllAvailable() finally { q.stop(); finish(q) }
+    spark.table(queryName)
+  }
+
   /** Parquet file stream over a file or directory: the file source
     * wants a directory, so a single-file path streams its parent with
     * a glob filter on the file name. One definition for every runner —
@@ -97,20 +122,7 @@ object Streams {
       .agg(aggs.head, aggs.tail: _*)
       .withColumn("window_start", col("window.start"))
       .drop("window")
-    // TEST-HARNESS DRAIN, not the production sink: complete-mode memory
-    // sink materializes the whole result table on the driver, which is
-    // exactly what you don't do at scale. The production shape of this
-    // query is outputMode("update"/"append") + watermark into a real
-    // sink (kafka/delta/parquet), where state and output stay
-    // partitioned across executors; only the drain differs, the
-    // windowed-aggregation plan is identical.
-    val q = withStatePartitions(spark)(grouped.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    drain(spark, grouped, "complete", queryName)
   }
 
   /** Streaming count-min sketch: per tumbling window, the depth×width
@@ -120,7 +132,7 @@ object Streams {
     * CONSTANT in key cardinality, which is the entire point of
     * sketching a stream: per-key windowed counts would hold every
     * distinct key in the state store. Complete-mode memory drain as in
-    * [[runTumblingAgg]] (harness-only); the final table equals the
+    * [[drain]] (harness-only); the final table equals the
     * batch windowed sketch, which is the DuckDB oracle.
     */
   def runStreamCms(spark: SparkSession, path: String, timeCol: String,
@@ -137,13 +149,7 @@ object Streams {
       .agg(count(lit(1)).as("n"))
       .withColumn("window_start", col("window.start"))
       .drop("window")
-    val q = withStatePartitions(spark)(cells.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    drain(spark, cells, "complete", queryName)
   }
 
   /** Streaming per-window value-bucket counts — the stateful half of
@@ -169,13 +175,7 @@ object Streams {
       .agg(count(lit(1)).as("cc"))
       .withColumn("window_start", col("window.start"))
       .drop("window")
-    val q = withStatePartitions(spark)(cur.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    drain(spark, cur, "complete", queryName)
   }
 
   /** Streaming per-window DISTINCT counts (the windowed-DAU shape):
@@ -186,7 +186,7 @@ object Streams {
     * evict once the watermark passes the window end, so an unbounded
     * log holds only the open windows' distinct keys — the reason this
     * beats collecting per-window sets. Complete-mode memory drain as
-    * in [[runTumblingAgg]] (harness-only).
+    * in [[drain]] (harness-only).
     */
   def runStreamWindowDistinct(spark: SparkSession, path: String,
                               timeCol: String, keyCol: String, len: String,
@@ -201,13 +201,7 @@ object Streams {
       .agg(count(lit(1)).as("n_distinct"))
       .withColumn("window_start", col("window.start"))
       .drop("window")
-    val q = withStatePartitions(spark)(grouped.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    drain(spark, grouped, "complete", queryName)
   }
 
   /** Streaming top-k (the trending-items shape): per-key counts
@@ -226,20 +220,14 @@ object Streams {
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col(keyCol))
       .limit(k)
-    val q = withStatePartitions(spark)(ranked.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    drain(spark, ranked, "complete", queryName)
   }
 
   /** Streaming HOPPING-window aggregation — `window(timeCol, len,
     * slide)` assigns each event to len/slide overlapping windows (the
     * streaming form of q35's batch hop; reference tumble generalized
     * the Flink HOP way). Complete-mode memory drain as in
-    * [[runTumblingAgg]] (harness-only; production = watermark + update
+    * [[drain]] (harness-only; production = watermark + update
     * mode into a real sink, state partitioned by window+key across
     * executors).
     */
@@ -254,20 +242,14 @@ object Streams {
       .agg(aggs.head, aggs.tail: _*)
       .withColumn("window_start", col("window.start"))
       .drop("window")
-    val q = withStatePartitions(spark)(grouped.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    drain(spark, grouped, "complete", queryName)
   }
 
   /** Streaming SESSION-window aggregation over a parquet file/dir —
     * `session_window(timeCol, gap)` merges events separated by less
     * than `gap` into one growing window per key, the streaming form of
     * q36's batch sessionization. Complete-mode memory drain as in
-    * [[runTumblingAgg]] (harness-only; production = watermark + update
+    * [[drain]] (harness-only; production = watermark + update
     * mode into a real sink, where in-progress sessions live in
     * key-partitioned state and close when the watermark passes gap).
     *
@@ -284,13 +266,7 @@ object Streams {
       .withColumn("session_start", col("sw.start"))
       .withColumn("session_end", col("sw.end"))
       .drop("sw")
-    val q = withStatePartitions(spark)(grouped.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    drain(spark, grouped, "complete", queryName)
   }
 
   /** Stream-stream INTERVAL join over one parquet event log: rows of
@@ -303,7 +279,7 @@ object Streams {
     * stream-stream join shape that survives an unbounded log.
     *
     * Drained through an append-mode memory sink (harness-only, as in
-    * [[runTumblingAgg]]); the drained output equals the batch interval
+    * [[drain]]); the drained output equals the batch interval
     * join, which is the oracle.
     */
   /** One typed side of a stream-stream join: filter `typeCol ===
@@ -337,13 +313,7 @@ object Streams {
         col("rts") >= col("lts") &&
         col("rts") <= col("lts") + expr(s"INTERVAL $within"))
       .select(col("left_id"), col("right_id"), col("k"))
-    val q = withStatePartitions(spark)(joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    drain(spark, joined, "append", queryName)
   }
 
   /** Stream-stream interval LEFT OUTER join: like
@@ -419,31 +389,22 @@ object Streams {
     // the st8/st11 drain from 4 batches to 2 with byte-identical
     // filtered output.
     sentinel(0L)
-    val q = withStatePartitions(spark)(joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    try {
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      // the memory sink owns the drained rows — the staged copy of the
-      // input is dead weight; delete it so repeated drains (bench
-      // loops, soaks) don't accumulate events-sized dirs under /tmp
+    // the memory sink owns the drained rows — the staged copy of the
+    // input is dead weight; delete it so repeated drains (bench loops,
+    // soaks) don't accumulate events-sized dirs under /tmp
+    val drained = drain(spark, joined, "append", queryName, finish = _ => {
       val walk = java.nio.file.Files.walk(stageDir)
       try walk.sorted(java.util.Comparator.reverseOrder())
         .forEach(p => java.nio.file.Files.deleteIfExists(p))
       finally walk.close()
-    }
+    })
     // sentinels are identified by their IDS (left -1 / right -2),
     // null-safely: filtering on k =!= -1 would (a) drop legitimate
     // data rows whose key happens to be -1 and (b) three-valued-logic
     // away outer rows whose key is NULL (a NULL-keyed left row never
     // matches, flushes null-padded, and NULL =!= -1 is NULL -> dropped
     // — while the batch LEFT JOIN oracle keeps it)
-    spark.table(queryName)
-      .filter(!(col("left_id") <=> -1L) && !(col("right_id") <=> -2L))
+    drained.filter(!(col("left_id") <=> -1L) && !(col("right_id") <=> -2L))
   }
 
   /** Stream-static enrichment join: an unbounded event stream
@@ -455,7 +416,7 @@ object Streams {
     * watermark needed because nothing is buffered across batches.
     *
     * Drained through the harness memory sink in complete mode (see
-    * [[runTumblingAgg]]'s drain caveat); the drained aggregate equals
+    * [[drain]]'s caveat); the drained aggregate equals
     * the batch join+aggregate, which is the oracle.
     */
   def runStreamStaticEnrich(spark: SparkSession, path: String,
@@ -468,13 +429,7 @@ object Streams {
     val joined = src.join(broadcast(dim), col(streamKey) === dim(dimKey))
     val grouped = joined.groupBy(groupCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
-    val q = withStatePartitions(spark)(grouped.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    drain(spark, grouped, "complete", queryName)
   }
 
   /** Streaming decontamination: stream-static LEFT ANTI join against a
@@ -493,13 +448,7 @@ object Streams {
     val raw = fileStream(spark, path)
     val src = preFilter.map(raw.filter).getOrElse(raw)
     val out = src.join(broadcast(static), joinCols, "left_anti")
-    val q = withStatePartitions(spark)(out.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    drain(spark, out, "append", queryName)
   }
 
   /** Streaming AS-OF dimension enrichment: each event joins the
@@ -530,13 +479,7 @@ object Streams {
         (dim(toCol).isNull || col(timeCol) < dim(toCol)))
     val grouped = joined.groupBy(groupCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
-    val q = withStatePartitions(spark)(grouped.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    drain(spark, grouped, "complete", queryName)
   }
 
   /** Streaming exact deduplication on `keyCols` over a parquet file/dir,
@@ -571,13 +514,7 @@ object Streams {
       .withWatermark(timeCol, delay)
       .dropDuplicatesWithinWatermark(keyCols)
       .select(keyCols.map(col): _*)
-    val q = withStatePartitions(spark)(deduped.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    try {
-      q.processAllAvailable()
+    drain(spark, deduped, "append", queryName, finish = q => {
       val dataBatches = q.recentProgress.count(_.numInputRows > 0)
       if (dataBatches > 1)
         throw new IllegalStateException(
@@ -585,8 +522,7 @@ object Streams {
             "batch-DISTINCT oracle is only valid for a single-batch drain " +
             "(keys recurring beyond the watermark delay re-emit). Unset " +
             "maxFilesPerTrigger or raise the delay past the data's span.")
-    } finally q.stop()
-    spark.table(queryName)
+    })
   }
 
   /** Per-band-bucket LSH state: the doc ids registered in this bucket
@@ -687,13 +623,7 @@ object Streams {
           state.update(LshBucketState(ids.toArray))
           out.iterator
       }
-    val q = withStatePartitions(spark)(pairs.toDF().writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    drain(spark, pairs.toDF(), "append", queryName)
   }
 
   case class QuotaState(admitted: Long)
@@ -718,14 +648,7 @@ object Streams {
     val src = fileStream(spark, path)
       .select(keyExpr.cast("string").as("key"), idExpr.cast("long").as("id"))
       .as[(String, Long)]
-    val q = withStatePartitions(spark)(quotaAdmitStream(src, k).toDF("key", "id")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    drain(spark, quotaAdmitStream(src, k).toDF("key", "id"), "append", queryName)
   }
 
   /** Streaming GROUP BY on a union-typed (VARIANT) key (VERDICT r8
@@ -744,13 +667,7 @@ object Streams {
     val src = fileStream(spark, path).select(varExpr.as("v"))
     val agg = src.groupBy(col("v")).agg(count(lit(1)).as("n"))
       .select(to_json(col("v")).as("val_json"), col("n"))
-    val q = withStatePartitions(spark)(agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    drain(spark, agg, "complete", queryName)
   }
 
   /** Stream-stream interval join on a UNION-TYPED key (VERDICT r9
@@ -786,13 +703,7 @@ object Streams {
         col("rts") <= col("lts") + expr(s"INTERVAL $within"))
       .select(col("left_id"), col("right_id"),
         to_json(col("lv")).as("val_json"))
-    val q = withStatePartitions(spark)(joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    drain(spark, joined, "append", queryName)
   }
 
   /** Streaming DISTINCT on a union-typed column (the last union-typed
@@ -810,13 +721,7 @@ object Streams {
     val src = fileStream(spark, path).select(varExpr.as("v"))
     val distinctV = src.distinct()
       .select(to_json(col("v")).as("val_json"))
-    val q = withStatePartitions(spark)(distinctV.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    drain(spark, distinctV, "complete", queryName)
   }
 
   /** Streaming crawl-frontier dedup: every discovered URL surface form
@@ -840,13 +745,7 @@ object Streams {
       .where(col("canonical").isNotNull)
       .groupBy("canonical")
       .agg(count(lit(1)).as("n_docs"), min(col("id")).as("first_doc"))
-    val q = withStatePartitions(spark)(agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    drain(spark, agg, "complete", queryName)
   }
 
   /** Streaming blocklist audit: the codegen'd Aho-Corasick kernel
@@ -871,13 +770,7 @@ object Streams {
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("hits") > 0, 1L).otherwise(0L)).as("n_flagged"),
         sum(col("hits")).as("n_occurrences"))
-    val q = withStatePartitions(spark)(agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    drain(spark, agg, "complete", queryName)
   }
 
   /** The quota state machine, exposed for MemoryStream-based
@@ -1015,13 +908,7 @@ object Streams {
                             queryName: String = "graft_fp"): DataFrame = {
     val agg = graft.operators.Layout.partitionFingerprints(
       fileStream(spark, path), partCol, col(contentCol))
-    val q = withStatePartitions(spark)(agg.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .start())
-    try q.processAllAvailable() finally q.stop()
-    spark.table(queryName)
+    drain(spark, agg, "complete", queryName)
   }
 
   /** One emitted row of a retraction-capable streaming outer join. */

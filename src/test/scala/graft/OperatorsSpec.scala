@@ -452,7 +452,7 @@ class OperatorsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val idx = Dedup.shingleIndex(docs, "doc_id", "text", 3, None, tokens = true)
     val capped = Dedup.capDocFreq(idx, Some(3))
-    // column order preserved: downstream positional renames (toDF) rely on it
+    // column order preserved
     assert(capped.columns.toSeq == idx.columns.toSeq)
     val kept = capped.select("shingle").as[String].collect()
     assert(!kept.contains("x y z") && kept.nonEmpty)
@@ -498,22 +498,23 @@ class OperatorsSpec extends SparkSpec {
 
   test("lsh bucket cap observes dropped doc slots (no silent caps)") {
     // 30 identical docs (every band bucket holds all 30 > maxBucket=10)
-    // + 5 fully distinct docs whose singleton buckets survive. The
-    // partial-drop shape is the realistic at-scale case — when EVERY
-    // bucket is dropped, AQE's empty-relation propagation can skip the
-    // probe side (and its observe) entirely, but a fully-empty
-    // candidate output is loud on its own.
+    // + 5 fully distinct docs whose singleton buckets survive but pair
+    // with nobody: the candidate set is empty, which AQE's
+    // empty-relation propagation would turn into an empty plan with no
+    // observers left if the cap ran lazily under the self-join.
     val docs = ((1 to 30).map(i => (i.toLong, "a b c d e f g h")) ++
       (31 to 35).map(i => (i.toLong,
         s"p$i q$i r$i s$i t$i u$i v$i w$i")))
       .toDF("doc_id", "text")
     val idx = Dedup.shingleIndex(docs, "doc_id", "text", 3, None, tokens = true)
-    val cand = Dedup.minhashLshCandidatesFromIndex(idx, k = 32, bands = 4,
-      maxBucket = 10)
-    // collect() (not count()) so the metrics land on THIS DataFrame's
-    // QueryExecution — count() spawns its own
-    assert(cand.collect().isEmpty) // identical docs dropped; distinct alone
-    val m = cand.queryExecution.observedMetrics
+    // the cap runs in the job that materializes the band table, so its
+    // report reaches the session's QueryExecutionListener from that job
+    val (_, qes) = PlanCapture.executions(spark) {
+      val cand = Dedup.minhashLshCandidatesFromIndex(idx, k = 32, bands = 4,
+        maxBucket = 10)
+      assert(cand.collect().isEmpty) // identical docs dropped; distinct alone
+    }
+    val m = qes.map(_._2.observedMetrics).reduce(_ ++ _)
     val in = m.collectFirst { case (k, r)
       if k.startsWith("graft_bucketcap_in_") => r.getLong(0) }.get
     val out = m.collectFirst { case (k, r)
@@ -521,6 +522,24 @@ class OperatorsSpec extends SparkSpec {
     // 35 docs × 4 bands = 140 banded rows; the 5 distinct docs' 20
     // singleton-bucket rows survive, the 120 degenerate ones drop
     assert(in == 140L && out == 20L, s"in=$in out=$out")
+  }
+
+  test("a cap in front of a bucketed table write reports from the write job") {
+    // d19's corpus-side bucket cap runs at ingest: the report must reach
+    // the session listener from the write itself
+    val banded = Seq((1L, 0, 7L), (2L, 0, 7L), (3L, 0, 7L), (4L, 1, 9L))
+      .toDF("id", "band", "sig")
+    val (_, qes) = PlanCapture.executions(spark) {
+      graft.sources.Sink.writeBucketed(
+        Dedup.capDocFreq(banded, Some(2), Seq("band", "sig"), "bucketcap"),
+        "spec_capped_bucket_write", Seq("band", "sig"), numBuckets = 2)
+    }
+    val m = qes.map(_._2.observedMetrics).reduce(_ ++ _)
+    def n(dir: String) = m.collectFirst { case (k, r)
+      if k.startsWith(s"graft_bucketcap_${dir}_") => r.getLong(0) }
+    assert(n("in").contains(4L) && n("out").contains(1L), m)
+    assert(spark.table("spec_capped_bucket_write").count() == 1)
+    spark.sql("DROP TABLE spec_capped_bucket_write")
   }
 
   test("minhashLshPairs agrees with exact jaccard on near-dups") {

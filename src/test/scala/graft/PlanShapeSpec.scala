@@ -241,4 +241,66 @@ class PlanShapeSpec extends SparkSpec {
     // two-level aggregation: base partials + delta partials + merge
     assert("HashAggregate".r.findAllIn(p).size >= 4, p)
   }
+
+  test("d2: the shingle self-join reads the key-partitioned index with no Exchange on either side") {
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    import graft.operators.Dedup
+    // d2 = ngramJaccardPairsFromIndex over hashedShingleIndex; the index
+    // materializes under the session's settings, then AQE and broadcast
+    // are disabled so the self-join plans as a SortMergeJoin whose sides
+    // show every exchange EnsureRequirements adds
+    val idx = Dedup.hashedShingleIndex(Engine.table(spark, sf, "documents"),
+      "doc_id", "text", n = 3, tokens = true, maxDocFreq = Some(50))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val plan = Dedup.ngramJaccardPairsFromIndex(idx, 0.8)
+        .queryExecution.executedPlan
+      val selfJoin = plan.collect {
+        case j: SortMergeJoinExec
+          if j.leftKeys.exists(_.references.exists(_.name == "shingle")) => j }
+      assert(selfJoin.size == 1, plan)
+      selfJoin.head.children.foreach { side =>
+        assert(side.collect { case e: ShuffleExchangeExec => e }.isEmpty, plan)
+      }
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", "true")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+  }
+
+  test("d3: every job of the query plans the MinHash signature aggregate once in all") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Final
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    // the eager materializations are jobs of their own: count the final
+    // signature aggregate over every planned physical tree (sparkPlan
+    // holds every branch, including ones AQE later prunes)
+    val (_, qes) = PlanCapture.executions(spark) {
+      SparkEntry.queries("d3_minhash_lsh")(spark, sf).collect()
+    }
+    val sigAggs = qes.map(_._2.sparkPlan).flatMap(_.collect {
+      case a: ObjectHashAggregateExec if a.aggregateExpressions.exists(e =>
+        e.mode == Final && e.aggregateFunction.isInstanceOf[graft.plans.MinHashAgg]) => a
+    })
+    assert(sigAggs.size == 1, qes.map(_._2.sparkPlan).mkString("\n\n"))
+  }
+
+  test("a binding LSH bucket cap reports through the session listener when no pair survives") {
+    import graft.operators.Similarity
+    import spark.implicits._
+    // 30 identical vectors: every bucket of every table holds all 30,
+    // over maxBucket = 10, so every row is dropped and no pair survives
+    val emb = (1 to 30).map(i => (i.toLong, Array.tabulate(64)(j => (j % 7).toDouble)))
+      .toDF("vec_id", "embedding")
+    val (_, qes) = PlanCapture.executions(spark) {
+      val pairs = Similarity.cosinePairsLsh(emb, 0.5, bits = 4, tables = 3,
+        maxBucket = 10)
+      assert(pairs.collect().isEmpty)
+    }
+    val m = qes.map(_._2.observedMetrics).reduce(_ ++ _)
+    def count(dir: String) = m.collectFirst { case (k, r)
+      if k.startsWith(s"graft_bucketcap_${dir}_") => r.getLong(0) }
+    assert(count("in").contains(90L) && count("out").contains(0L), m)
+  }
 }
