@@ -174,9 +174,9 @@ object Bench {
     // dir from an interrupted run is rewritten, not trusted
     if (!new java.io.File(csvDir, "_SUCCESS").exists())
       li.write.option("header", "true").mode("overwrite").csv(csvDir)
-    // schema inference once, outside the timed region: the reference
-    // samples 100 rows (~free); Spark's inferSchema is a full pass, so
-    // hoist it as a catalog lookup would
+    // this timer covers the scan and the group-by only: the schema is
+    // inferred once, outside the timed region, as a catalog lookup
+    // would supply it
     val csvSchema = graft.sources.PathTable.read(spark, csvDir, "csv").schema
     def csvFlagship(): Double = {
       val t0 = System.nanoTime()

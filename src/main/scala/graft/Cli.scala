@@ -217,9 +217,10 @@ object Cli {
       // --explain 1|2 emits the optimized physical plan as graphviz dot
       // (physical/explain.go; 2 adds type info), like the reference's
       // `dot -Tpng` pipeline but printing the dot source.
+      // A sampled CSV's plan is explained with its exact types, as describe does.
       if (!args.describe && args.explain >= 1) {
         out.print(graft.octo.DotPlan.render(
-          prep0.df.queryExecution.executedPlan, args.explain >= 2))
+          prep0.exact.fold(prep0)(_()).df.queryExecution.executedPlan, args.explain >= 2))
         return 0
       }
       val prep = if (args.describe) Formats.describeRows(prep0) else prep0

@@ -1,5 +1,6 @@
 package graft.octo
 
+import graft.sources.CsvSample
 import graft.sql.Dialect.Prepared
 
 /** The CLI's output surface, matching the reference byte-for-byte
@@ -16,6 +17,10 @@ import graft.sql.Dialect.Prepared
   * Rendering is driver-side over the collected result — the same
   * boundary where the reference's printers sit. The query itself runs
   * distributed; only the final stdout bytes are assembled here.
+  *
+  * A query whose CSV scan met a value the CSV's sampled type cannot
+  * parse (`CsvSample.isMiss`) is rendered once more from
+  * `Prepared.exact`, its re-prepare with full-file inference.
   */
 object Formats {
 
@@ -130,7 +135,9 @@ object Formats {
     * (cmd/describe.go DescribeNode), rendered through the chosen
     * format via a synthetic Prepared-shaped result.
     */
-  def describeRows(prep: Prepared): Prepared = {
+  def describeRows(prepared: Prepared): Prepared = {
+    // no scan runs to check a sampled CSV schema: describe the exact one
+    val prep = prepared.exact.fold(prepared)(_())
     val names = withoutQualifiers(prep.names)
     val types = prep.df.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
       prep.otypes.applyOrElse(i, (_: Int) => None)
@@ -150,7 +157,14 @@ object Formats {
       validations = Nil)
   }
 
-  def render(prep: Prepared, output: String): String = output match {
+  def render(prep: Prepared, output: String): String =
+    try renderOnce(prep, output)
+    catch {
+      case e: Exception if prep.exact.isDefined && CsvSample.isMiss(e) =>
+        renderOnce(prep.exact.get(), output)
+    }
+
+  private def renderOnce(prep: Prepared, output: String): String = output match {
     case "csv" => renderCsv(prep)
     case "json" => renderJson(prep)
     case "stream_native" => renderStreamNative(prep)

@@ -140,6 +140,12 @@ object OType {
     } else OString
   }
 
+  /** Records a file source types itself from: the reference previews the
+    * first 100 of a JSON (json/impl.go:27-75) or CSV (csv/impl.go:36-130)
+    * file. [[graft.sources.CsvSample]] samples CSV with the same count.
+    */
+  final val SampleRecords = 100
+
   /** Infer the per-field schema from the first `limit` JSONL lines, like
     * the reference's preview pass (json/impl.go:27-75). Fields sorted by
     * name. Lines must be JSON objects; a non-object or unparseable line
@@ -152,7 +158,7 @@ object OType {
     * TypeSum's deep merge). Identical data types differently by
     * nesting depth in the reference too.
     */
-  def inferJsonl(lines: Iterator[String], limit: Int = 100): Seq[(String, OType)] = {
+  def inferJsonl(lines: Iterator[String], limit: Int = SampleRecords): Seq[(String, OType)] = {
     val fields = scala.collection.mutable.LinkedHashMap[String, OType]()
     var i = 0
     while (lines.hasNext && i < limit) {

@@ -18,22 +18,18 @@ import graft.octo._
   * Execution shape: one distributed `spark.read.text` scan; every field
   * is a codegen'd `variant_get` off a single `parse_json`, so pruning
   * and parallelism are Spark-native. The strict validation pass (CLI
-  * parity only) reuses the same scan with per-file line ordinals from
-  * `PathTable.linesWithNumbers`.
+  * parity only) is one more job over the same text scan.
   */
 object OctoJson {
 
   /** First-100-line driver inference, like the reference's
-    * `WithPreview()` open (json/impl.go:27-56).
+    * `WithPreview()` open (json/impl.go:27-56). The lines are decoded as
+    * UTF-8 like Spark's executors decode them (the platform default
+    * charset could mis-decode multibyte field names) and decompressed
+    * like Spark's text reader does (`orders.json.gz`).
     */
-  def infer(path: String): Seq[(String, OType)] = {
-    // explicit UTF-8: the platform default charset can mis-decode
-    // multibyte field names and silently desynchronize inference from
-    // Spark's (always-UTF-8) executors
-    val src = scala.io.Source.fromFile(path, "UTF-8")
-    try OType.inferJsonl(src.getLines())
-    finally src.close()
-  }
+  def infer(spark: SparkSession, path: String): Seq[(String, OType)] =
+    PathTable.headLines(spark, path)(OType.inferJsonl(_))
 
   def inferLines(lines: Seq[String]): Seq[(String, OType)] =
     OType.inferJsonl(lines.iterator)
@@ -73,42 +69,52 @@ object OctoJson {
     project(spark, spark.createDataset(lines).toDF("__line"), fields)
   }
 
+  /** The error of a line that is not one JSON object, if any. */
+  private def lineError(mapper: ObjectMapper, text: String): Option[String] =
+    try {
+      val node = mapper.readTree(text)
+      if (node == null || !node.isObject) Some(s"expected JSON object, got '$text'")
+      else None
+    } catch { case _: Exception => Some(JsonErrors.parseError(text)) }
+
+  /** One file split's share of a validation pass: its line count and,
+    * if it has one, its first bad line (split-local index, error).
+    */
+  private final class SplitCheck(val pid: Int, val file: String) extends Serializable {
+    var lines = 0L
+    var bad: Option[(Long, String)] = None
+  }
+
   /** Full-file validation with reference-parity errors: the first
     * unparseable / non-object line (1-based, per file) raises
-    * `JsonLineException`. Distributed scan; only the (rare) error rows
-    * come back to the driver.
+    * `JsonLineException`. One job over the text scan: each (partition,
+    * file) split reports its line count and its first bad line, and
+    * the driver numbers that line from the counts of the file's earlier
+    * splits ([[PathTable.splitOffsets]]).
     */
   def validate(spark: SparkSession, path: String): Unit = {
-    import spark.implicits._
-    val bad = PathTable.linesWithNumbers(spark, path)
-      .select(col("number"), col("text"))
-      .mapPartitions { it =>
+    val splits = spark.read.text(path).select(input_file_name(), col("value")).rdd
+      .mapPartitionsWithIndex { (pid, rows) =>
         val mapper = new ObjectMapper()
-        it.flatMap { r =>
-          val line = r.getLong(0); val text = r.getString(1)
-          val err: Option[String] =
-            try {
-              val node = mapper.readTree(text)
-              if (node == null || !node.isObject) Some(s"expected JSON object, got '$text'")
-              else None
-            } catch { case _: Exception => Some(JsonErrors.parseError(text)) }
-          err.map(e => (line, e))
+        val byFile = scala.collection.mutable.LinkedHashMap[String, SplitCheck]()
+        rows.foreach { r =>
+          val s = byFile.getOrElseUpdate(r.getString(0), new SplitCheck(pid, r.getString(0)))
+          if (s.bad.isEmpty) s.bad = lineError(mapper, r.getString(1)).map(s.lines -> _)
+          s.lines += 1
         }
-      }.toDF("line", "err")
-    bad.orderBy("line").limit(1).collect().headOption.foreach { r =>
-      throw new JsonLineException((r.getLong(0) + 1).toInt, r.getString(1))
-    }
+        byFile.valuesIterator
+      }.collect().toSeq
+    val offsets = PathTable.splitOffsets(splits.map(s => (s.pid, s.file) -> s.lines))
+    splits.flatMap(s => s.bad.map { case (i, err) => (offsets((s.pid, s.file)) + i, err) })
+      .minByOption(_._1).foreach { case (line, err) =>
+        throw new JsonLineException((line + 1).toInt, err)
+      }
   }
 
   private val driverMapper = new ObjectMapper()
 
   def validateLines(lines: Seq[String]): Unit =
     lines.iterator.zipWithIndex.foreach { case (text, i) =>
-      val mapper = driverMapper
-      val ok = try {
-        val node = mapper.readTree(text); node != null && node.isObject
-      } catch { case _: Exception =>
-        throw new JsonLineException(i + 1, JsonErrors.parseError(text)) }
-      if (!ok) throw new JsonLineException(i + 1, s"expected JSON object, got '$text'")
+      lineError(driverMapper, text).foreach(e => throw new JsonLineException(i + 1, e))
     }
 }

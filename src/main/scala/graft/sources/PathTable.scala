@@ -1,5 +1,9 @@
 package graft.sources
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.nio.charset.StandardCharsets
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -9,10 +13,14 @@ import org.apache.spark.sql.functions._
   * `?header=false`, `?sep=x`, `ext.path` overrides
   * (parser/parser.go:321-356).
   *
-  * Spark-first: each resolves to a `DataFrameReader` call, so schema
-  * inference, parallel IO, predicate pushdown and column pruning are the
-  * built-in ones. The JSON worker pool / CSV sampling machinery of the
-  * reference is subsumed by Spark's distributed readers.
+  * Spark-first: each resolves to a `DataFrameReader` call, so parallel
+  * IO, predicate pushdown and column pruning are the built-in ones; the
+  * reference's JSON worker pool is subsumed by Spark's distributed
+  * readers. `read` types CSV by a full-file inference pass, as
+  * `OctoSql.run`, `SparkEntry` and `Bench` need. The CLI path samples
+  * instead, like the reference, from [[headLines]]: JSON in
+  * [[OctoJson.infer]], CSV in [[CsvSample]], which falls back to
+  * `read`'s inference where the sample cannot be trusted.
   */
 object PathTable {
 
@@ -21,7 +29,7 @@ object PathTable {
     * double option block) must not silently discard every option and
     * read the file with defaults.
     */
-  private def splitOpts(spec: String): (String, Map[String, String]) =
+  def splitOpts(spec: String): (String, Map[String, String]) =
     spec.split("\\?", 2) match {
       case Array(p)       => (p, Map.empty)
       case Array(p, opts) =>
@@ -33,13 +41,43 @@ object PathTable {
         }.toMap)
     }
 
+  private val PrefixForm = "^(csv|tsv|json|parquet|orc|lines|txt|log)\\.(.+)$".r
+
+  /** The file path and reader format a table name names (everything
+    * after any `?` already split off): `csv.myfile` reads `myfile` with
+    * the csv handler (physical.go GetDatasource database rule); a
+    * compressed text file `data.json.gz` is json, because Spark's text
+    * readers decompress by extension through the Hadoop codec registry
+    * (a gzip member is one split — fine for the sizes a compressed
+    * drop-file has). Columnar formats carry their own codecs:
+    * `parquet.gz` keeps its suffix and resolves to a clear
+    * unsupported-format message (the parquet reader on a gzip stream
+    * fails with a magic-bytes error).
+    */
+  def formatOf(path: String): (String, String) = path match {
+    case PrefixForm(fmt, rest) if !rest.contains('.') => (rest, fmt)
+    case _ =>
+      val textFmts = Set("csv", "tsv", "json", "lines", "txt", "log")
+      val parts = path.split('.')
+      val last = parts.last.toLowerCase
+      val ext =
+        // .warc.gz keeps its own member-aware decompressor (the gzip
+        // members ARE the record index) — never the Hadoop codec path
+        if (last == "gz" && parts.length >= 3 &&
+            parts(parts.length - 2).toLowerCase == "warc")
+          "warcgz"
+        else if ((last == "gz" || last == "bz2") && parts.length >= 3 &&
+            textFmts.contains(parts(parts.length - 2).toLowerCase))
+          parts(parts.length - 2).toLowerCase
+        else last
+      (path, ext)
+  }
+
   /** Resolve a table spec to a DataFrame. Accepts `path.ext[?opts]`,
     * `stdin.ext` (reference: execution/files/stdin.go), or the
     * `docs.functions` / `docs.aggregates` self-documentation tables
     * (datasources/docs/database.go:26-121).
     */
-  private val PrefixForm = "^(csv|tsv|json|parquet|orc|lines|txt|log)\\.(.+)$".r
-
   def resolve(spark: SparkSession, spec: String): DataFrame = {
     val (path, opts) = splitOpts(spec)
     if (path.startsWith("stdin."))
@@ -55,36 +93,12 @@ object PathTable {
       OctoConfig.table(spark,
         OctoConfig.database(path.split('.')(0)).get, path.split('.')(1))
     else path match {
-      // format-prefixed names (physical.go GetDatasource database rule):
-      // `csv.myfile` reads file `myfile` with the csv handler;
       // `lines.stdin` is the lines handler over stdin
       case PrefixForm(fmt, rest) if rest == "stdin" =>
         readStdin(spark, if (fmt == "txt" || fmt == "log") "lines" else fmt, opts)
-      case PrefixForm(fmt, rest) if !rest.contains('.') =>
-        read(spark, rest, fmt, opts)
       case _ =>
-        // `data.json.gz` → json: Spark's TEXT-based readers decompress
-        // by extension via the Hadoop codec registry, so the FORMAT is
-        // the extension before the compression suffix. A gzip member
-        // is one split — fine for the sizes a compressed drop-file
-        // has. Columnar formats carry their own codecs: `parquet.gz`
-        // is NOT stripped (the parquet reader on a gzip stream fails
-        // with a magic-bytes error, so the suffix stays and resolves
-        // to a clear unsupported-format message instead)
-        val textFmts = Set("csv", "tsv", "json", "lines", "txt", "log")
-        val parts = path.split('.')
-        val last = parts.last.toLowerCase
-        val ext =
-          // .warc.gz keeps its own member-aware decompressor (the gzip
-          // members ARE the record index) — never the Hadoop codec path
-          if (last == "gz" && parts.length >= 3 &&
-              parts(parts.length - 2).toLowerCase == "warc")
-            "warcgz"
-          else if ((last == "gz" || last == "bz2") && parts.length >= 3 &&
-              textFmts.contains(parts(parts.length - 2).toLowerCase))
-            parts(parts.length - 2).toLowerCase
-          else last
-        read(spark, path, ext, opts)
+        val (file, format) = formatOf(path)
+        read(spark, file, format, opts)
     }
   }
 
@@ -122,14 +136,14 @@ object PathTable {
     }
   }
 
+  /** The CSV reader options a table spec's `?header=` / `?sep=` give. */
+  def csvOptions(opts: Map[String, String]): Map[String, String] =
+    Map("header" -> opts.getOrElse("header", "true"), "sep" -> opts.getOrElse("sep", ","))
+
   def read(spark: SparkSession, path: String, format: String,
            opts: Map[String, String] = Map.empty): DataFrame = format match {
     case "csv" =>
-      spark.read
-        .option("header", opts.getOrElse("header", "true"))
-        .option("inferSchema", "true")
-        .option("sep", opts.getOrElse("sep", ","))
-        .csv(path)
+      spark.read.options(csvOptions(opts)).option("inferSchema", "true").csv(path)
     case "tsv" =>
       read(spark, path, "csv", opts + ("sep" -> "\t"))
     case "json" => // JSONLines, schema merged across sampled records.
@@ -165,6 +179,20 @@ object PathTable {
       throw new IllegalArgumentException(s"unsupported table format: $other")
   }
 
+  /** The file's first line ordinal in each (partition, file) split,
+    * from the line counts of those splits: cumulative in partition-index
+    * order, because Spark plans a file's splits in offset order with
+    * stable size-descending packing, so a later byte range never lands
+    * in an earlier partition index.
+    */
+  def splitOffsets(counts: Seq[((Int, String), Long)]): Map[(Int, String), Long] =
+    counts.groupBy(_._1._2).flatMap { case (_, splits) =>
+      var acc = 0L
+      splits.sortBy(_._1._1).map { case (k, c) =>
+        val off = acc; acc += c; k -> off
+      }
+    }
+
   /** Per-file line ordinals without a single-task global window.
     *
     * Scale design (the round-1 `Window.orderBy(monotonically_increasing_id())`
@@ -172,13 +200,11 @@ object PathTable {
     * same deterministic text scan —
     *   1. count rows per (partition, file) — a tiny aggregate, one row
     *      per file split;
-    *   2. re-scan and add `offset(partition, file) + local index`,
-    *      computed per partition with no shuffle of the data itself.
-    * Split offsets are cumulative in partition-index order: Spark plans
-    * a file's splits in offset order with stable size-descending
-    * packing, so a later byte range never lands in an earlier partition
-    * index. Output keeps per-split parallelism — a 10 GB file numbers
-    * on ~80 tasks, not 1.
+    *   2. re-scan and add `offset(partition, file) + local index`
+    *      ([[splitOffsets]]), computed per partition with no shuffle of
+    *      the data itself.
+    * Output keeps per-split parallelism — a 10 GB file numbers on ~80
+    * tasks, not 1.
     */
   def linesWithNumbers(spark: SparkSession, path: String,
                        lineSep: Option[String] = None): DataFrame = {
@@ -187,17 +213,8 @@ object PathTable {
     val base = reader.text(path)
       .select(input_file_name().as("file"), col("value").as("text"))
     val withPid = base.withColumn("pid", spark_partition_id())
-    val counts = withPid.groupBy("pid", "file").count().collect()
-      .map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2))
-    val offsets: Map[(Int, String), Long] = {
-      val byFile = counts.groupBy(_._1._2)
-      byFile.flatMap { case (_, splits) =>
-        var acc = 0L
-        splits.sortBy(_._1._1).map { case (k, c) =>
-          val off = acc; acc += c; k -> off
-        }
-      }
-    }
+    val offsets = splitOffsets(withPid.groupBy("pid", "file").count().collect().toSeq
+      .map(r => (r.getInt(0), r.getString(1)) -> r.getLong(2)))
     withPid.mapPartitions { it =>
       val local = scala.collection.mutable.HashMap[String, Long]()
       it.map { r =>
@@ -207,6 +224,39 @@ object PathTable {
         (offsets.getOrElse((pid, file), 0L) + i, text, file)
       }
     }.toDF("number", "text", "file")
+  }
+
+  /** The lines of the files at `path` — one file, a directory of part
+    * files or a glob, the files in path order — read lazily on the
+    * driver, decoded as UTF-8 and decompressed by extension through
+    * Hadoop's codec registry, as Spark's text readers do. `f` takes as many as it
+    * needs; a file is opened only when the lines before it are used up.
+    * Directory listings skip the hidden and `_`-prefixed files Spark's
+    * file index skips.
+    */
+  def headLines[A](spark: SparkSession, path: String)(f: Iterator[String] => A): A = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    def hidden(name: String) =
+      name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.filterNot(c => hidden(c.getPath.getName))
+        .sortBy(_.getPath.getName).flatMap(leaves)
+    val files = Option(fs.globStatus(p)).toSeq.flatten.sortBy(_.getPath.toString).flatMap(leaves)
+    val codecs = new CompressionCodecFactory(conf)
+    var open: Option[BufferedReader] = None
+    def lines(st: FileStatus): Iterator[String] = {
+      open.foreach(_.close())
+      val raw = fs.open(st.getPath)
+      val in = Option(codecs.getCodec(st.getPath)).fold[java.io.InputStream](raw)(_.createInputStream(raw))
+      val r = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
+      open = Some(r)
+      Iterator.continually(r.readLine()).takeWhile(_ != null)
+    }
+    try f(files.iterator.flatMap(lines))
+    finally open.foreach(_.close())
   }
 
   /** Streaming variant of the lines source (`?tail=true` in the

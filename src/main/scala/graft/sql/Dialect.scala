@@ -1,9 +1,10 @@
 package graft.sql
 
+import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.octo._
-import graft.sources.{Docs, OctoJson, PathTable}
+import graft.sources.{CsvSample, Docs, OctoJson, PathTable}
 
 /** Reference-parity front-end for the CLI surface (the strict pipeline
   * behind `graft.Cli` and the golden-scenario replay).
@@ -17,6 +18,14 @@ import graft.sources.{Docs, OctoJson, PathTable}
   *    qualifier-carrying names for `SELECT *` over aliased relations
   *  - octosql-typed JSON ingest (first-100-line inference, unions as
   *    VARIANT) with line-numbered parse errors ([[graft.sources.OctoJson]])
+  *  - CSV/TSV typed from the header and the first 100 records, like the
+  *    reference (csv/impl.go:36-130), so the query's scan is the file's
+  *    only read ([[graft.sources.CsvSample]]). The result is full-file
+  *    inference's for every input: a sample that could hide a later
+  *    widening, or a plan that may leave values unread, takes full
+  *    inference at once; otherwise the scan runs FAILFAST, and
+  *    `Formats.render` re-runs a query whose scan met a value the
+  *    sampled type cannot parse from `Prepared.exact`
   *  - typecheck parity: outer joins require conjunction-of-equalities
   *    predicates (physical/nodes join typecheck)
   *  - named-argument TVFs in SQL: `tumble(source => TABLE x,
@@ -40,13 +49,19 @@ object Dialect {
     */
   case class RelInfo(cols: Seq[(String, OType)], timeField: Option[String] = None)
 
+  /** A prepared CLI query. When a CSV relation was typed from its
+    * sample and is scanned FAILFAST, `df` can fail with a
+    * `CsvSample.isMiss` error, and `exact` re-prepares the query with
+    * every CSV typed by full-file inference; `Formats` handles both.
+    */
   case class Prepared(
       df: DataFrame,
       names: Seq[String],
       otypes: Seq[Option[OType]],
       ordered: Boolean,
       timeField: Int,
-      validations: Seq[() => Unit])
+      validations: Seq[() => Unit],
+      exact: Option[() => Prepared] = None)
 
   class TypecheckException(msg: String) extends RuntimeException(msg)
 
@@ -79,13 +94,47 @@ object Dialect {
 
   // ---- entry point ---------------------------------------------------
 
-  def prepare(spark: SparkSession, sql: String, ctx: Ctx = Ctx()): Prepared = {
+  /** One prepare's binding state: the relations bound so far, their
+    * deferred validations, and whether a CSV was typed from its sample.
+    * stdin is single-pass, so it is drained once per query and shared
+    * with the query's re-prepare.
+    */
+  private final class Binding(val ctx: Ctx, val sampleCsv: Boolean, readStdin: => Seq[String]) {
+    lazy val stdinLines: Seq[String] = readStdin
+    val rels = scala.collection.mutable.HashMap[String, RelInfo]()
+    val validations = Seq.newBuilder[() => Unit]
+    var sampled = false
+  }
+
+  private def binding(ctx: Ctx, sampleCsv: Boolean) = new Binding(ctx, sampleCsv,
+    ctx.stdin.map(_.linesIterator.toSeq).getOrElse(scala.io.Source.stdin.getLines().toSeq))
+
+  def prepare(spark: SparkSession, sql: String, ctx: Ctx = Ctx()): Prepared =
+    prepareBound(spark, sql, binding(ctx, sampleCsv = true))
+
+  /** `prepare` with every CSV typed by full-file inference. */
+  private[graft] def prepareExact(spark: SparkSession, sql: String, ctx: Ctx = Ctx()): Prepared =
+    prepareBound(spark, sql, binding(ctx, sampleCsv = false))
+
+  private def prepareBound(spark: SparkSession, sql: String, b: Binding): Prepared = {
+    val exact = () => prepareBound(spark, sql, new Binding(b.ctx, sampleCsv = false, b.stdinLines))
+    Try(prepareWith(spark, sql, b)) match {
+      case Success(prep) if !b.sampled => prep
+      case Success(prep) if !prep.df.isStreaming && CsvSample.scansEveryValue(prep.df) =>
+        prep.copy(exact = Some(exact))
+      case Failure(e) if !b.sampled => throw e
+      // a sampled type can fail a typecheck the exact one passes
+      case _ => exact()
+    }
+  }
+
+  private def prepareWith(spark: SparkSession, sql: String, b: Binding): Prepared = {
     registerFunctions(spark)
     var tokens = OctoSql.portableRewrites(OctoSql.tokenize(sql))
     checkOuterJoins(tokens)
-    val rels = scala.collection.mutable.HashMap[String, RelInfo]()
-    val validations = Seq.newBuilder[() => Unit]
-    tokens = bind(spark, tokens, ctx, rels, validations)
+    val rels = b.rels
+    val validations = b.validations
+    tokens = bind(spark, tokens, b)
     tokens = rewriteAsofJoins(spark, tokens)
     tokens = rewriteTvfs(spark, tokens, rels)
     val named = nameSelect(spark, tokens, rels.toMap)
@@ -478,33 +527,18 @@ object Dialect {
     parts.length == 2 && (parts(0) == "stdin" || parts(1) == "stdin")
   }
 
-  /** `csv.myfile` format-prefix form (physical.go database rule). */
-  private val PrefixForm = "^(csv|tsv|json|parquet|lines|txt|log)\\.([^.?]+)$".r
-
   /** Position-aware path-table binding: only tokens in FROM/JOIN/
     * comma-in-FROM position are treated as tables (a column named
     * `t.lines` stays a column), and view names carry a content hash so
     * distinct paths can't alias (ADVICE round 1).
     */
-  private def bind(spark: SparkSession, tokens: Vector[String], ctx: Ctx,
-                   rels: scala.collection.mutable.Map[String, RelInfo],
-                   validations: scala.collection.mutable.Builder[() => Unit, Seq[() => Unit]]): Vector[String] =
-    OctoSql.bindWalk(tokens)(t => bindOne(spark, t, ctx, rels, validations))
+  private def bind(spark: SparkSession, tokens: Vector[String], b: Binding): Vector[String] =
+    OctoSql.bindWalk(tokens)(t => bindOne(spark, t, b))
 
-  private def bindOne(spark: SparkSession, spec: String, ctx: Ctx,
-                      rels: scala.collection.mutable.Map[String, RelInfo],
-                      validations: scala.collection.mutable.Builder[() => Unit, Seq[() => Unit]]): String = {
+  private def bindOne(spark: SparkSession, spec: String, b: Binding): String = {
+    import b.{ctx, rels, validations}
     val view = OctoSql.viewNameFor(spec)
-    val (pathPart, opts) = spec.split('?') match {
-      case Array(p) => (p, Map.empty[String, String])
-      case Array(p, o) => (p, o.split('&').filter(_.nonEmpty).map { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => k -> v
-          case Array(k) => k -> "true"
-        }
-      }.toMap)
-      case parts => (parts.head, Map.empty[String, String])
-    }
+    val (pathPart, opts) = PathTable.splitOpts(spec)
     val df: DataFrame =
       if (pathPart.startsWith("docs.") &&
           Docs.TableNames.contains(pathPart.stripPrefix("docs.")))
@@ -514,8 +548,7 @@ object Dialect {
       else if (isStdinSpec(pathPart)) {
         val parts = pathPart.split('.')
         val format = if (parts(0) == "stdin") parts(1) else parts(0)
-        val lines = ctx.stdin.map(_.linesIterator.toSeq)
-          .getOrElse(scala.io.Source.stdin.getLines().toSeq)
+        val lines = b.stdinLines
         if (format == "json") {
           val fields = OctoJson.inferLines(lines)
           validations += (() => OctoJson.validateLines(lines))
@@ -530,20 +563,19 @@ object Dialect {
         graft.sources.OctoConfig.table(spark,
           graft.sources.OctoConfig.database(parts(0)).get, parts(1))
       } else {
-        val (realPath, ext) = pathPart match {
-          case PrefixForm(fmt, rest) => (rest, fmt)
-          case _ if pathPart.toLowerCase.endsWith(".warc.gz") =>
-            // member-aware decompressor, not the Hadoop codec path
-            (pathPart, "warcgz")
-          case _ => (pathPart, pathPart.split('.').last.toLowerCase)
-        }
+        val (realPath, ext) = PathTable.formatOf(pathPart)
         val resolved =
           if (realPath.startsWith("/")) realPath else s"${ctx.baseDir}/$realPath"
         if (ext == "json") {
-          val fields = OctoJson.infer(resolved)
+          val fields = OctoJson.infer(spark, resolved)
           validations += (() => OctoJson.validate(spark, resolved))
           val d = OctoJson.read(spark, resolved, fields)
           rels(view) = RelInfo(fields)
+          d
+        } else if (b.sampleCsv && (ext == "csv" || ext == "tsv")) {
+          val (d, route) = CsvSample.read(spark, resolved,
+            if (ext == "tsv") opts + ("sep" -> "\t") else opts)
+          if (route == CsvSample.Sampled) b.sampled = true
           d
         } else PathTable.read(spark, resolved, ext, opts)
       }

@@ -15,6 +15,12 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Run `f` with `spark` as the thread's active session, so that
+    * `SQLConf.get` inside it reads that session's conf.
+    */
+  def withActive[T](spark: SparkSession)(f: => T): T =
+    spark.asInstanceOf[classic.SparkSession].withActive(f)
+
   /** Wrap a Catalyst expression as a Column — for custom expressions
     * carrying non-Expression parameters (e.g. a centroid matrix), which
     * can't go through the function registry.

@@ -483,4 +483,36 @@ class DialectSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getInt(1))).toSeq
     assert(rows == Seq(("a", 2), ("b", 9)))
   }
+
+  private def gzip(path: java.nio.file.Path, text: String): Unit = {
+    val out = new java.util.zip.GZIPOutputStream(java.nio.file.Files.newOutputStream(path))
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
+
+  test("a gzipped CSV binds as csv on the CLI path") {
+    val dir = java.nio.file.Files.createTempDirectory("dgz")
+    gzip(dir.resolve("d.csv.gz"), "k,v\nb,2\na,1\n")
+    val (out, err, code) = runCli(s"SELECT k, v FROM $dir/d.csv.gz")
+    assert(code == 0, err)
+    assert(out ==
+      """+-----+---+
+        ||  k  | v |
+        |+-----+---+
+        || 'a' | 1 |
+        || 'b' | 2 |
+        |+-----+---+
+        |""".stripMargin)
+  }
+
+  test("a gzipped JSON file binds as json on the CLI path") {
+    val dir = java.nio.file.Files.createTempDirectory("dgz")
+    gzip(dir.resolve("o.json.gz"), "{\"k\": \"b\", \"v\": 2}\n{\"k\": \"a\", \"v\": 1}\n")
+    val (out, err, code) = runCli(s"SELECT k, v FROM $dir/o.json.gz", "--output", "csv")
+    assert(code == 0, err)
+    // octosql types JSON numbers as Float; inference read the gzip
+    assert(out.linesIterator.toSeq.sorted == Seq("a,1", "b,2", "k,v"))
+    val (desc, err2, code2) = runCli(s"SELECT k, v FROM $dir/o.json.gz", "--describe")
+    assert(code2 == 0, err2)
+    assert(desc.contains("'v'") && desc.contains("'Float'"), desc)
+  }
 }

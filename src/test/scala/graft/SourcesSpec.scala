@@ -1,7 +1,12 @@
 package graft
 
 import java.nio.file.Files
-import graft.sources.PathTable
+import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.ListenerBusBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import graft.octo.{Formats, JsonLineException}
+import graft.sources.{OctoJson, PathTable}
+import graft.sql.Dialect
 
 /** File-source round-trips the reference supports (CSV/TSV/JSON/lines,
   * SURVEY §2.1) — the driver gate only exercises parquet, so these pin
@@ -88,5 +93,74 @@ class SourcesSpec extends SparkSpec {
     // through one task via Window.orderBy(monotonically_increasing_id())
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), s"unpartitioned Window crept back into the lines plan:\n$plan")
+  }
+
+  /** `body`'s result, the jobs it started and its tasks' input bytes. */
+  private def io[T](body: => T): (T, Long, Long) = {
+    val jobs = new AtomicLong
+    val bytesRead = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => bytesRead.addAndGet(m.inputMetrics.bytesRead))
+    }
+    ListenerBusBridge.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      ListenerBusBridge.drain(spark.sparkContext)
+      (out, jobs.get, bytesRead.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a CLI group-by over a CSV of more than 100 records reads the file once") {
+    val p = write("once.csv", (1 to 5000).map(i => s"${i % 7},$i").mkString("k,v\n", "\n", "\n"))
+    val (prep, prepJobs, prepBytes) =
+      io(Dialect.prepare(spark, s"SELECT k, COUNT(*), SUM(v) FROM $p GROUP BY k"))
+    // the schema came from the sample: nothing ran before the query's own jobs
+    assert(prep.exact.isDefined)
+    assert(prepJobs == 0 && prepBytes == 0)
+    val (out, jobs, bytes) = io(Formats.render(prep, "csv"))
+    assert(out.linesIterator.size == 8, out)
+    assert(jobs > 0)
+    assert(bytes == new java.io.File(p).length)
+  }
+
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally old.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  private def validationError(path: String): JsonLineException =
+    intercept[JsonLineException](OctoJson.validate(spark, path))
+
+  test("json validation numbers a bad line in a later split of a file") {
+    val lines = (0 until 60).map(i => s"""{"id": $i, "name": "row number $i"}""")
+      .updated(41, """{"id": 41, "name": oops}""")
+    val p = write("split.json", lines.mkString("", "\n", "\n"))
+    val expected = intercept[JsonLineException](OctoJson.validateLines(lines))
+    withConf("spark.sql.files.maxPartitionBytes" -> "400") {
+      assert(spark.read.text(p).rdd.getNumPartitions > 2)
+      val (e, jobs, _) = io(validationError(p))
+      assert(e.line == 42)
+      assert(e.getMessage == expected.getMessage)
+      assert(jobs == 1)
+    }
+  }
+
+  test("json validation numbers a bad line in the second of two files per file") {
+    val d = Files.createTempDirectory("graft_jv")
+    Files.writeString(d.resolve("a.json"), (0 until 5).map(i => s"""{"a": $i}""").mkString("\n"))
+    val b = Seq("""{"b": 0}""", """{"b": 1}""", "[1, 2]", """{"b": 3}""")
+    Files.writeString(d.resolve("b.json"), b.mkString("\n"))
+    val expected = intercept[JsonLineException](OctoJson.validateLines(b))
+    assert(validationError(d.toString).getMessage == expected.getMessage)
+    Files.writeString(d.resolve("b.json"), """{"b": 0}""")
+    OctoJson.validate(spark, d.toString)
   }
 }
